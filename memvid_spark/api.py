@@ -19,13 +19,14 @@ identical either way.
 from __future__ import annotations
 
 import hashlib
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.text import quality_score, token_count
 from .operators import ask as ask_mod
-from .operators import asof, knn as knn_mod, search as search_mod
+from .operators import asof, hnsw, knn as knn_mod, search as search_mod
 from .plans.parser import compile_predicate, parse_query
 
 PUT_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -39,6 +40,350 @@ _MEDIA_MIMES = {
     "wav": "audio/wav",
     "mp4": "video/mp4",
 }
+
+
+class _AnnTier:
+    """One IVF-cell NSW serving tier of a store (src/vec.rs:22-28,
+    345-435 HNSW): index, directory-pruned read handle, coarse model,
+    meta and pending puts, plus the whole lifecycle — build,
+    incremental refresh with the drift retrain, save, open, doctor
+    audit and heal. Subclasses say only where vectors come from:
+    :meth:`track` (the full active set), :meth:`delta` (the vectors of
+    the pending puts) and :meth:`covered` (the id set the index must
+    cover, without decoding payloads). ``key`` names the manifest
+    entry, the persisted files and the doctor tables."""
+
+    key = ""
+    not_built = ""
+    empty = ""
+
+    def __init__(self, mv: "MemvidSpark"):
+        self.mv = mv
+        self._index: DataFrame | None = None
+        self.handle = None
+        self.model = None
+        self.meta: dict | None = None
+        self.pending: list = []
+
+    def track(self) -> DataFrame:
+        raise NotImplementedError
+
+    def delta(self, pending: list) -> DataFrame:
+        raise NotImplementedError
+
+    def covered(self) -> DataFrame:
+        raise NotImplementedError
+
+    # Every assignment (build, delta apply, retrain, entry-cover
+    # refresh) drops the directory-pruned read handle: the handle reads
+    # only the probed cells' directories per request (O(probes) file
+    # listing instead of O(n_cells), hnsw.CellIndexHandle) and is valid
+    # only while the persisted layout IS the serving truth, i.e. right
+    # after open() or save(). Maintenance paths read the DataFrame.
+    @property
+    def index(self) -> DataFrame | None:
+        return self._index
+
+    @index.setter
+    def index(self, df: DataFrame | None) -> None:
+        self._index = df
+        self.handle = None
+
+    @property
+    def built(self) -> bool:
+        return self._index is not None
+
+    def serving_index(self):
+        """What a search reads: the handle when current, else the
+        DataFrame."""
+        return self.handle or self._index
+
+    def build(
+        self,
+        n_cells: int | None,
+        m: int,
+        ef_construction: int,
+        ef_search: int,
+        probes: int,
+        max_shard_rows: int,
+        target_cell_rows: int,
+        min_cells: int,
+        max_cells: int,
+    ) -> None:
+        """Train the coarse model and build the graph over
+        :meth:`track` (arguments: ``build_ann_serving``'s)."""
+        self.mv._ensure_writable()
+        emb = self.track()
+        n_rows = emb.count()
+        if n_rows == 0:
+            raise ValueError(self.empty)
+        auto = n_cells is None
+        if auto:
+            n_cells = hnsw.auto_n_cells(
+                n_rows, target_cell_rows,
+                min_cells=min_cells, max_cells=max_cells,
+            )
+        self.model = hnsw.train_coarse_model(emb, n_cells, n_hint=int(n_rows))
+        self.meta = {
+            **hnsw.coarse_model_meta(self.model),  # n_cells, model
+            "m": m,
+            "ef_construction": ef_construction,
+            "ef_search": ef_search,
+            "probes": probes,
+            "max_shard_rows": max_shard_rows,
+            "n_rows": int(n_rows),
+            "auto_cells": bool(auto),
+            "target_cell_rows": int(target_cell_rows),
+            "min_cells": int(min_cells),
+            "max_cells": int(max_cells),
+        }
+        self.index = hnsw.build_nsw_index_ivf(
+            emb,
+            self.model,
+            m=m,
+            ef_construction=ef_construction,
+            max_shard_rows=max_shard_rows,
+            n_hint=int(n_rows),
+        ).localCheckpoint()
+        self.pending = []
+
+    def rebuild(self) -> None:
+        """Retrain + rebuild with the settings in the meta: an
+        auto-sized tier re-sizes from the live count within its
+        persisted clamp, a pinned tier keeps its cell count. The drift
+        retrain and the doctor heal both land here."""
+        meta = self.meta
+        self.build(
+            n_cells=None if meta.get("auto_cells") else meta["n_cells"],
+            m=meta["m"],
+            ef_construction=meta["ef_construction"],
+            ef_search=meta["ef_search"],
+            probes=meta["probes"],
+            max_shard_rows=meta["max_shard_rows"],
+            target_cell_rows=int(
+                meta.get("target_cell_rows", meta["max_shard_rows"])
+            ),
+            min_cells=int(meta.get("min_cells", 4)),
+            max_cells=int(meta.get("max_cells", 4096)),
+        )
+
+    def refresh(self) -> dict:
+        """Apply pending puts and tombstones INCREMENTALLY
+        (apply_delta_ivf: only touched cells rebuild — the reference's
+        finalize_indexes moment, mutation.rs:913-918), then run the
+        drift policy (``ivf_needs_retrain``): when occupancy skew,
+        drained cells or — for an auto-sized tier — mean occupancy past
+        the target cross their bound, retrain and rebuild. Returns the
+        policy stats."""
+        if not self.built:
+            raise ValueError(self.not_built)
+        meta = self.meta
+        dels = None
+        if self.mv._tombstones:
+            dels = self.mv.spark.createDataFrame(
+                [(int(t),) for t in sorted(self.mv._tombstones)],
+                "vec_id long",
+            )
+        if self.pending or dels is not None:
+            self.index = hnsw.apply_delta_ivf(
+                self.index,
+                self.delta(self.pending),
+                self.model,
+                m=meta["m"],
+                ef_construction=meta["ef_construction"],
+                max_shard_rows=meta["max_shard_rows"],
+                deletes=dels,
+                n_hint=len(self.pending),
+            ).localCheckpoint()
+            self.pending = []
+        auto = bool(meta.get("auto_cells", False))
+        tcr = int(meta.get("target_cell_rows", meta["max_shard_rows"]))
+        needs, stats = hnsw.ivf_needs_retrain(
+            self.index,
+            trained_cells=meta["n_cells"],
+            # auto-sized tiers also retrain when mean occupancy outgrows
+            # the target (the RESIZE moment); pinned tiers keep the
+            # skew/drained-only policy
+            target_cell_rows=tcr if auto else None,
+        )
+        if needs:
+            self.rebuild()
+            stats["retrained"] = True
+            stats["n_cells"] = self.meta["n_cells"]
+        else:
+            meta["n_rows"] = int(stats["n_rows"])
+        return stats
+
+    def refresh_entry_cover(self) -> None:
+        """Heal action for ``stale_entry_cover`` findings: rewrite the
+        entry covers of the served graph in place (one O(V+E) pass per
+        sub-graph, hnsw.refresh_entry_cover) — no rebuild, no retrain."""
+        self.index = hnsw.refresh_entry_cover(self.index).localCheckpoint()
+
+    def save(self, path: str) -> None:
+        """Derived but EXPENSIVE to derive, so the tier persists with
+        the store like the reference's vector index: pending mutations
+        apply first, then the ``partitionBy("cell")`` layout write-swaps
+        (reopened stores get planning-time PartitionFilters) and the
+        model persists in its form (hnsw.save_coarse_model)."""
+        self.refresh()
+        idx_path = os.path.join(path, f"{self.key}_index.parquet")
+        self.index = self.mv._write_swap(
+            self.index, idx_path, partition_by="cell"
+        )
+        self.handle = hnsw.CellIndexHandle(self.mv.spark, idx_path)
+        self.model = hnsw.save_coarse_model(
+            self.model, os.path.join(path, f"{self.key}_centroids")
+        )
+
+    def open(self, path: str, meta: dict | None) -> None:
+        idx_path = os.path.join(path, f"{self.key}_index.parquet")
+        if not meta or not os.path.exists(idx_path):
+            return
+        spark = self.mv.spark
+        spark.catalog.refreshByPath(idx_path)
+        # keys a tier no longer reads (older stores recorded the
+        # model-form bound) ride along unused
+        self.meta = dict(meta)
+        self.index = spark.read.parquet(idx_path)
+        self.handle = hnsw.CellIndexHandle(spark, idx_path)
+        self.model = hnsw.load_coarse_model(
+            spark, os.path.join(path, f"{self.key}_centroids")
+        )
+
+    def audit(self, id_col: str) -> DataFrame:
+        """The tier's doctor findings. The index covers exactly
+        :meth:`covered`: a missing row is an un-indexed vector, an
+        orphan one the store no longer holds (doctor_recovery.rs drops
+        each index kind and expects doctor to flag + heal it). A
+        sub-graph with no entry=true row (any index persisted before
+        the cover existed) searches on evenly spaced seeds alone and
+        can return recall 0 on a directed-severed island: every such
+        (cell, shard) is a ``stale_entry_cover`` finding, healed by a
+        cover rewrite, not a rebuild."""
+        from .operators.doctor import doctor_report
+
+        indexed = self.index.select(F.col("vec_id").alias(id_col))
+        covered = self.covered().select(F.col("vec_id").alias(id_col))
+        rep = doctor_report(
+            covered, {f"{self.key}_index": indexed}, frame_key=id_col
+        ).filter(F.col("table_name") != "frames")
+        idx = self.index
+        if "entry" in idx.columns:
+            no_cover = (
+                idx.groupBy("cell", "shard")
+                .agg(F.max(F.col("entry").cast("int")).alias("e"))
+                .filter(F.col("e") == 0)
+            )
+        else:  # legacy layout: the column itself is missing
+            no_cover = idx.select("cell", "shard").distinct()
+        return rep.unionByName(
+            no_cover.agg(F.count("*").cast("long").alias("n_affected"))
+            .select(
+                F.lit("stale_entry_cover").alias("check"),
+                F.lit(f"{self.key}_entry_cover").alias("table_name"),
+                "n_affected",
+            )
+        )
+
+    def heal_registry(self) -> dict[str, Callable[[], None]]:
+        return {
+            f"{self.key}_index": self.rebuild,
+            f"{self.key}_entry_cover": self.refresh_entry_cover,
+        }
+
+    def stats(self) -> dict | None:
+        if not self.built:
+            return None
+        return {"n_cells": self.meta["n_cells"], "n_rows": self.meta["n_rows"]}
+
+
+class _TextAnnTier(_AnnTier):
+    """The tier over the stored vector track."""
+
+    key = "ann"
+    not_built = "ANN tier not built: call build_ann_serving"
+    empty = "no embeddings to index: add vectors first"
+
+    def track(self) -> DataFrame:
+        return self.mv._ann_active_track()
+
+    def delta(self, pending: list) -> DataFrame:
+        # array<float>, NOT double: the track stores float32
+        # (EMB_SCHEMA), and the delta must round-trip through the same
+        # precision or tie-adjacent neighbor orders diverge from a
+        # rebuild over the persisted track. Arrow-path createDataFrame
+        # (pandas input): the python-list form parallelizes across 32
+        # PYTHON slices and every delta-planning action re-pays ~5
+        # cpu_s of worker roundtrips; the Arrow form is JVM-side
+        # batches. Arrow slices small frames into per-row partitions; a
+        # handful of python tasks beats 32 near-empty ones.
+        import pandas as pd
+
+        return self.mv.spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "vec_id": [int(fid) for fid, _ in pending],
+                    "embedding": [[float(x) for x in v] for _, v in pending],
+                }
+            ),
+            "vec_id long, embedding array<float>",
+        ).coalesce(max(1, min(32, len(pending) // 5000)))
+
+    def covered(self) -> DataFrame:
+        return self.mv._ann_active_track().select("vec_id")
+
+
+class _ImageAnnTier(_AnnTier):
+    """The tier over the cross-modal image space (clip.rs:297-380
+    searches image vectors with the same HNSW as text). Payload decode
+    runs once per payload: the build embeds every retained image, a
+    refresh only the pending puts; the index stores the small integer
+    vectors, payloads never shuffle."""
+
+    key = "img_ann"
+    not_built = "image ANN tier not built: call build_image_ann_serving"
+    empty = "no image media to index: put images first"
+
+    @staticmethod
+    def _embed(media: DataFrame) -> DataFrame:
+        from .operators import crossmodal
+
+        return crossmodal.embed_images(media).select(
+            F.col("media_id").alias("vec_id"),
+            F.col("emb").cast("array<double>").alias("embedding"),
+        )
+
+    def track(self) -> DataFrame:
+        # one decode pass feeds count + train + build
+        return self._embed(self.mv.media("image")).localCheckpoint()
+
+    def delta(self, pending: list) -> DataFrame:
+        if not pending:
+            return self.mv.spark.createDataFrame(
+                [], "vec_id long, embedding array<double>"
+            )
+        # media() already excludes tombstones, so a pending put deleted
+        # before the refresh lands only as a delete
+        return self._embed(
+            self.mv.media("image").filter(
+                F.col("media_id").isin(sorted(set(pending)))
+            )
+        )
+
+    def covered(self) -> DataFrame:
+        return self.mv.media("image").select(
+            F.col("media_id").alias("vec_id")
+        )
+
+
+def _tier_attr(tier: str, attr: str) -> property:
+    """A private facade name (``_ann_meta``, ``_img_ann_index``, ...)
+    read and written through to one tier's field."""
+    return property(
+        lambda self: getattr(getattr(self, tier), attr),
+        lambda self, value: setattr(getattr(self, tier), attr, value),
+    )
 
 
 class MemvidSpark:
@@ -99,6 +444,19 @@ class MemvidSpark:
         self._trusted_pubkey: bytes | None = None
         self._tier = "free"
         self._payload_tail = 0
+        # the two ANN serving tiers (built on demand)
+        self._text_tier = _TextAnnTier(self)
+        self._image_tier = _ImageAnnTier(self)
+
+    # private names the tests, q188 and perfbench read
+    _ann_index = _tier_attr("_text_tier", "index")
+    _ann_cents = _tier_attr("_text_tier", "model")
+    _ann_meta = _tier_attr("_text_tier", "meta")
+    _ann_pending = _tier_attr("_text_tier", "pending")
+    _img_ann_index = _tier_attr("_image_tier", "index")
+    _img_ann_cents = _tier_attr("_image_tier", "model")
+    _img_ann_meta = _tier_attr("_image_tier", "meta")
+    _img_ann_pending = _tier_attr("_image_tier", "pending")
 
     # -- ingestion (mutation.rs:3090-3316) --------------------------------
 
@@ -498,22 +856,21 @@ class MemvidSpark:
         is recorded on ``self._last_image_search_route``."""
         from .operators import crossmodal
 
-        meta = getattr(self, "_img_ann_meta", None)
+        tier = self._image_tier
         routed = (
             ann is not False
-            and self.image_ann_enabled()
-            and meta["n_rows"] >= self.ANN_ENGAGE_ROWS
+            and tier.built
+            and tier.meta["n_rows"] >= self.ANN_ENGAGE_ROWS
         )
         self._last_image_search_route = "ann" if routed else "exact"
         if routed:
+            meta = tier.meta
             # the exact path filters tombstones via media(); the served
-            # graph updates at the next build — exclude frames deleted
-            # since (session-bounded set)
+            # graph updates at the next refresh — exclude frames
+            # deleted since (session-bounded set)
             return crossmodal.crossmodal_knn_ann(
-                # directory-pruned handle when the persisted layout is
-                # current (post-open/save); DataFrame otherwise
-                self.__dict__.get("_img_ann_handle") or self._img_ann_index,
-                self._img_ann_cents,
+                tier.serving_index(),
+                tier.model,
                 text,
                 k=k,
                 ef_search=meta["ef_search"],
@@ -554,98 +911,25 @@ class MemvidSpark:
         return df
 
     def image_ann_enabled(self) -> bool:
-        return getattr(self, "_img_ann_index", None) is not None
+        return self._image_tier.built
 
     def _note_media_put(self, media_id: int, mime: str) -> None:
         """Track image puts landing AFTER the image ANN tier was built
         — the pending set :meth:`refresh_image_ann_index` embeds and
         delta-applies (only those payloads decode again; the rest of
-        the corpus never re-embeds). Session-bounded like the text
-        tier's ``_ann_pending``."""
+        the corpus never re-embeds)."""
         if self.image_ann_enabled() and mime.startswith("image/"):
-            if not hasattr(self, "_img_ann_pending"):
-                self._img_ann_pending = []
-            self._img_ann_pending.append(int(media_id))
+            self._image_tier.pending.append(int(media_id))
 
     def refresh_image_ann_index(self) -> dict:
         """Apply buffered image puts and tombstones to the IMAGE ANN
         serving tier INCREMENTALLY (apply_delta_ivf — only touched
-        cells rebuild), replacing the round-10 point-in-time posture
-        (any media mutation invalidated the tier until a full
-        decode+rebuild). Decode stays once-per-payload: ONLY the
-        pending puts' payloads run the embed pass; tombstones drop
-        straight from their cells. The drift policy then mirrors the
-        text tier (``ivf_needs_retrain`` — skew / drained / resize
-        triggers a retrain + full rebuild). Returns the policy stats.
-        Called by :meth:`save` and :meth:`vacuum`; safe any time."""
-        if not self.image_ann_enabled():
-            raise ValueError(
-                "image ANN tier not built: call build_image_ann_serving"
-            )
-        from .operators import crossmodal
-        from .operators.hnsw import apply_delta_ivf, ivf_needs_retrain
-
-        meta = self._img_ann_meta
-        pending = sorted(set(getattr(self, "_img_ann_pending", ())))
-        dels = None
-        if self._tombstones:
-            dels = self.spark.createDataFrame(
-                [(int(t),) for t in sorted(self._tombstones)], "vec_id long"
-            )
-        if pending or dels is not None:
-            delta_emb = None
-            if pending:
-                # media() already excludes tombstones, so a pending put
-                # deleted before the refresh lands only as a delete
-                media_delta = self.media("image").filter(
-                    F.col("media_id").isin(pending)
-                )
-                delta_emb = crossmodal.embed_images(media_delta).select(
-                    F.col("media_id").alias("vec_id"),
-                    F.col("emb").cast("array<double>").alias("embedding"),
-                )
-            else:
-                delta_emb = self.spark.createDataFrame(
-                    [], "vec_id long, embedding array<double>"
-                )
-            self._img_ann_index = apply_delta_ivf(
-                self._img_ann_index,
-                delta_emb,
-                self._img_ann_cents,
-                m=meta["m"],
-                ef_construction=meta["ef_construction"],
-                max_shard_rows=meta["max_shard_rows"],
-                deletes=dels,
-                n_hint=len(pending),
-            ).localCheckpoint()
-            self._img_ann_pending = []
-        auto = bool(meta.get("auto_cells", False))
-        tcr = int(meta.get("target_cell_rows", meta["max_shard_rows"]))
-        needs, stats = ivf_needs_retrain(
-            self._img_ann_index,
-            trained_cells=meta["n_cells"],
-            target_cell_rows=tcr if auto else None,
-        )
-        if needs:
-            # drift crossed the bound: retrain + full rebuild (the one
-            # remaining whole-corpus decode moment, now policy-gated
-            # instead of per-mutation)
-            self.build_image_ann_serving(
-                n_cells=None if auto else meta["n_cells"],
-                m=meta["m"],
-                ef_construction=meta["ef_construction"],
-                ef_search=meta["ef_search"],
-                probes=meta["probes"],
-                max_shard_rows=meta["max_shard_rows"],
-                target_cell_rows=tcr,
-                min_cells=int(meta.get("min_cells", 4)),
-                max_cells=int(meta.get("max_cells", 4096)),
-                frame_model_min_cells=meta.get("frame_model_min_cells"),
-            )
-            stats["retrained"] = True
-            stats["n_cells"] = self._img_ann_meta["n_cells"]
-        meta["n_rows"] = int(stats["n_rows"])
-        return stats
+        cells rebuild). Decode stays once-per-payload: ONLY the pending
+        puts' payloads run the embed pass; tombstones drop straight
+        from their cells. The drift policy is the text tier's
+        (:meth:`refresh_ann_index`). Returns the policy stats. Called
+        by :meth:`save` and :meth:`vacuum`; safe any time."""
+        return self._image_tier.refresh()
 
     def build_image_ann_serving(
         self,
@@ -658,95 +942,25 @@ class MemvidSpark:
         target_cell_rows: int = 25000,
         min_cells: int = 4,
         max_cells: int = 4096,
-        frame_model_min_cells: int | None = None,
     ) -> None:
         """Build (or rebuild) the IVF-cell NSW serving tier over the
         CROSS-MODAL IMAGE space — the reference's second ANN space
         (clip.rs:297-380 searches image vectors with the same HNSW it
         uses for text, src/vec.rs). Without it every
         :meth:`search_images` call decodes and scores the whole image
-        corpus — at multimodal corpus scale, the exact linear term the
-        text tier eliminated. Payload decode runs ONCE here (the
-        embed_images mapInPandas pass — the index stores only the
-        small integer vectors, payloads never shuffle); searches then
-        serve cell-pruned from the persisted graph. Same auto-sizing,
-        clamp, engage-threshold AND frame-model semantics as
-        :meth:`build_ann_serving`: past ``frame_model_min_cells`` the
-        image tier's coarse model stays a DATAFRAME too
-        (hnsw.CentroidFrame — a multimodal corpus sized for 10^5+
-        cells never collects or broadcasts the centroid table; the
-        delta, search and doctor paths all route on model type).
-        Derived and rebuildable, persists with the store on
-        :meth:`save`. Media mutations after the build apply
-        INCREMENTALLY (:meth:`refresh_image_ann_index` — only the
-        pending payloads decode+embed, tombstones drop from their
-        cells; a full rebuild happens only when the drift policy
-        trips — the reference's rebuild-indexes-at-commit lifecycle as
-        a policy, not a per-mutation cost)."""
-        self._ensure_writable()
-        from .operators import crossmodal
-        from .operators.hnsw import (
-            SCALED_TRAIN_MIN_CELLS,
-            auto_n_cells,
-            build_nsw_index_ivf,
-            train_cell_centroids,
-            train_cell_centroids_frame,
+        corpus. Payload decode runs ONCE here (the embed_images
+        mapInPandas pass — the index stores only the small integer
+        vectors, payloads never shuffle); searches then serve
+        cell-pruned from the persisted graph. Same auto-sizing, clamp,
+        engage threshold and coarse-model forms as
+        :meth:`build_ann_serving`. Derived and rebuildable, persists
+        with the store on :meth:`save`. Media mutations after the
+        build apply INCREMENTALLY (:meth:`refresh_image_ann_index`); a
+        full rebuild happens only when the drift policy trips."""
+        self._image_tier.build(
+            n_cells, m, ef_construction, ef_search, probes,
+            max_shard_rows, target_cell_rows, min_cells, max_cells,
         )
-
-        emb = crossmodal.embed_images(self.media("image")).select(
-            F.col("media_id").alias("vec_id"),
-            F.col("emb").cast("array<double>").alias("embedding"),
-        ).localCheckpoint()  # one decode pass feeds count+train+build
-        n_rows = emb.count()
-        if n_rows == 0:
-            raise ValueError("no image media to index: put images first")
-        auto = n_cells is None
-        if auto:
-            n_cells = auto_n_cells(
-                n_rows, target_cell_rows,
-                min_cells=min_cells, max_cells=max_cells,
-            )
-        fmb = (
-            frame_model_min_cells
-            if frame_model_min_cells is not None
-            else SCALED_TRAIN_MIN_CELLS
-        )
-        if n_cells > fmb:
-            cf = train_cell_centroids_frame(
-                emb, n_cells=n_cells, id_col="vec_id", n_hint=int(n_rows)
-            )
-            self._img_ann_cents = cf
-            model_kind, model_cells = "frame", int(cf.n_cells)
-        else:
-            cents = train_cell_centroids(
-                emb, n_cells=n_cells, id_col="vec_id", n_hint=int(n_rows)
-            )
-            self._img_ann_cents = [[float(x) for x in c] for c in cents]
-            model_kind, model_cells = "ndarray", len(self._img_ann_cents)
-        self._img_ann_meta = {
-            "n_cells": model_cells,
-            "m": m,
-            "ef_construction": ef_construction,
-            "ef_search": ef_search,
-            "probes": probes,
-            "max_shard_rows": max_shard_rows,
-            "n_rows": int(n_rows),
-            "auto_cells": bool(auto),
-            "target_cell_rows": int(target_cell_rows),
-            "min_cells": int(min_cells),
-            "max_cells": int(max_cells),
-            "model": model_kind,
-            "frame_model_min_cells": int(fmb),
-        }
-        self._img_ann_index = build_nsw_index_ivf(
-            emb,
-            self._img_ann_cents,
-            m=m,
-            ef_construction=ef_construction,
-            max_shard_rows=max_shard_rows,
-            n_hint=int(n_rows),
-        ).localCheckpoint()
-        self._img_ann_pending = []
 
     def media_features(self) -> DataFrame:
         """Modality-routed feature vectors over every retained payload:
@@ -951,12 +1165,10 @@ class MemvidSpark:
         vacuum, mutation.rs:2999-3084, :913-918): tombstoned vectors
         drop from their cells via the incremental delta, never a full
         rebuild unless the drift policy trips."""
-        if self.ann_enabled() and not getattr(self, "_read_only", False):
-            self.refresh_ann_index()
-        if self.image_ann_enabled() and not getattr(
-            self, "_read_only", False
-        ):
-            self.refresh_image_ann_index()
+        if not getattr(self, "_read_only", False):
+            for tier in (self._text_tier, self._image_tier):
+                if tier.built:
+                    tier.refresh()
         return self.docs()
 
     def _union_docs(self) -> DataFrame:
@@ -1715,9 +1927,7 @@ class MemvidSpark:
             # buffered for the serving tier's incremental delta — the
             # index stays stale until save()/refresh_ann_index applies
             # it cell-locally (finalize_indexes moment, mutation.rs:913)
-            if not hasattr(self, "_ann_pending"):
-                self._ann_pending = []
-            self._ann_pending.extend(
+            self._text_tier.pending.extend(
                 (fid, [float(x) for x in vec]) for fid, vec in pairs
             )
         self._vec_dim = new_dim
@@ -1731,7 +1941,7 @@ class MemvidSpark:
             self._spill_emb_buffer()
         if (
             self.ann_enabled()
-            and len(getattr(self, "_ann_pending", ())) >= self.EMB_SPILL_ROWS
+            and len(self._text_tier.pending) >= self.EMB_SPILL_ROWS
         ):
             self.refresh_ann_index()
         return len(pairs)
@@ -1828,16 +2038,13 @@ class MemvidSpark:
         vectors, src/vec.rs:22-23) is the routing policy: below it the
         exact scan IS the right plan and ann=True falls through to it.
         """
-        if ann and self.ann_enabled():
-            meta = self._ann_meta
+        tier = self._text_tier
+        if ann and tier.built:
+            meta = tier.meta
             if meta["n_rows"] >= self.ANN_ENGAGE_ROWS:
-                from .operators.hnsw import nsw_knn_pruned
-
-                return nsw_knn_pruned(
-                    # directory-pruned handle when the persisted layout
-                    # is current (post-open/save); DataFrame otherwise
-                    self.__dict__.get("_ann_handle") or self._ann_index,
-                    self._ann_cents,
+                return hnsw.nsw_knn_pruned(
+                    tier.serving_index(),
+                    tier.model,
                     query_vec,
                     k=k,
                     ef_search=meta["ef_search"],
@@ -1867,35 +2074,8 @@ class MemvidSpark:
 
     ANN_ENGAGE_ROWS = 1000  # brute-vs-ANN routing bound, vec.rs:22-23
 
-    # The serving indexes are exposed as properties so that EVERY
-    # assignment (build, delta apply, retrain, entry-cover refresh)
-    # invalidates the directory-pruned read handle (round 11): the
-    # handle short-circuits per-request file listing to the probed
-    # cells' directories (O(probes) instead of O(n_cells) — see
-    # operators/hnsw.py CellIndexHandle) and is only valid while the
-    # persisted layout IS the serving truth, i.e. right after open()
-    # or save(). Maintenance paths read the DataFrame as before.
-
-    @property
-    def _ann_index(self):
-        return self.__dict__.get("_ann_index_df")
-
-    @_ann_index.setter
-    def _ann_index(self, df) -> None:
-        self.__dict__["_ann_index_df"] = df
-        self.__dict__.pop("_ann_handle", None)
-
-    @property
-    def _img_ann_index(self):
-        return self.__dict__.get("_img_ann_index_df")
-
-    @_img_ann_index.setter
-    def _img_ann_index(self, df) -> None:
-        self.__dict__["_img_ann_index_df"] = df
-        self.__dict__.pop("_img_ann_handle", None)
-
     def ann_enabled(self) -> bool:
-        return getattr(self, "_ann_index", None) is not None
+        return self._text_tier.built
 
     def build_ann_serving(
         self,
@@ -1908,7 +2088,6 @@ class MemvidSpark:
         target_cell_rows: int = 25000,
         min_cells: int = 4,
         max_cells: int = 4096,
-        frame_model_min_cells: int | None = None,
     ) -> None:
         """Build (or retrain) the IVF-cell NSW serving tier over the
         ACTIVE vector track: coarse centroids from a bounded seeded
@@ -1929,86 +2108,24 @@ class MemvidSpark:
         CPU / per-delta rebuild wall grow with it; corpus-sized cells
         keep both constant as data grows, and drift retrains RE-size
         (refresh_ann_index). Pass an explicit n_cells to pin it (the
-        pinned count then survives retrains — the legacy posture).
+        pinned count then survives retrains).
 
         ``min_cells`` / ``max_cells`` bound the auto sizing (the
-        auto_n_cells clamp). The default max_cells=4096 is conservative
-        — a >100M-row corpus at the default target wants more cells,
-        and raising the clamp needs no code fork: past 4096 cells the
-        centroid TRAINER goes distributed (per-super-group k-means)
-        and the ASSIGNMENT is already two-level; past
-        ``frame_model_min_cells`` (default: the same 4096 bound) the
-        coarse model itself stays a DATAFRAME (hnsw.CentroidFrame —
-        trained by ``train_cell_centroids_frame``, persisted as
-        parquet + manifest on :meth:`save`), so no facade entry point
-        collects or broadcasts the O(n_cells · dim) centroid table:
-        assignment, deltas and searches route through the cogroup /
-        super-block forms. At or below the bound the ndarray model is
-        byte-identical to previous rounds (existing stores replay).
-        The clamp survives retrains (refresh_ann_index re-sizes within
-        the same bounds)."""
-        self._ensure_writable()
-        from .operators.hnsw import (
-            SCALED_TRAIN_MIN_CELLS,
-            auto_n_cells,
-            build_nsw_index_ivf,
-            train_cell_centroids,
-            train_cell_centroids_frame,
+        auto_n_cells clamp); the clamp survives retrains and heals.
+        The default max_cells=4096 is conservative — a >100M-row
+        corpus at the default target wants more cells, and raising the
+        clamp needs no code fork: past 4096 cells the centroid TRAINER
+        goes distributed (per-super-group k-means) and the ASSIGNMENT
+        is already two-level. The coarse model's form follows its size
+        (hnsw.train_coarse_model): past ``hnsw.FRAME_MODEL_MIN_CELLS``
+        (4096) it stays a DATAFRAME (hnsw.CentroidFrame, persisted as
+        parquet + manifest on :meth:`save`), so nothing collects or
+        broadcasts the O(n_cells · dim) centroid table; at or below it
+        the model is the byte-identical driver-side list."""
+        self._text_tier.build(
+            n_cells, m, ef_construction, ef_search, probes,
+            max_shard_rows, target_cell_rows, min_cells, max_cells,
         )
-
-        emb = self._ann_active_track()
-        n_rows = emb.count()
-        if n_rows == 0:
-            raise ValueError("no embeddings to index: add vectors first")
-        auto = n_cells is None
-        if auto:
-            n_cells = auto_n_cells(
-                n_rows, target_cell_rows,
-                min_cells=min_cells, max_cells=max_cells,
-            )
-        fmb = (
-            frame_model_min_cells
-            if frame_model_min_cells is not None
-            else SCALED_TRAIN_MIN_CELLS
-        )
-        if n_cells > fmb:
-            # past the broadcast bound: the model never visits the
-            # driver whole — train, assign, search all DataFrame-side
-            cf = train_cell_centroids_frame(
-                emb, n_cells=n_cells, id_col="vec_id", n_hint=int(n_rows)
-            )
-            self._ann_cents = cf
-            model_kind, model_cells = "frame", int(cf.n_cells)
-        else:
-            cents = train_cell_centroids(
-                emb, n_cells=n_cells, id_col="vec_id", n_hint=int(n_rows)
-            )
-            self._ann_cents = [[float(x) for x in c] for c in cents]
-            model_kind, model_cells = "ndarray", len(self._ann_cents)
-        self._ann_meta = {
-            "n_cells": model_cells,
-            "m": m,
-            "ef_construction": ef_construction,
-            "ef_search": ef_search,
-            "probes": probes,
-            "max_shard_rows": max_shard_rows,
-            "n_rows": int(n_rows),
-            "auto_cells": bool(auto),
-            "target_cell_rows": int(target_cell_rows),
-            "min_cells": int(min_cells),
-            "max_cells": int(max_cells),
-            "model": model_kind,
-            "frame_model_min_cells": int(fmb),
-        }
-        self._ann_index = build_nsw_index_ivf(
-            emb,
-            self._ann_cents,
-            m=m,
-            ef_construction=ef_construction,
-            max_shard_rows=max_shard_rows,
-            n_hint=int(n_rows),
-        ).localCheckpoint()
-        self._ann_pending = []
 
     def search_embeddings_many(
         self,
@@ -2034,14 +2151,13 @@ class MemvidSpark:
         similarity join (cosine, small query side by contract).
         ``exclude_same_id=True`` drops hits whose vec_id equals the
         query id (corpus-vs-self joins)."""
-        if ann and self.ann_enabled():
-            meta = self._ann_meta
+        tier = self._text_tier
+        if ann and tier.built:
+            meta = tier.meta
             if meta["n_rows"] >= self.ANN_ENGAGE_ROWS:
-                from .operators.hnsw import nsw_knn_join
-
-                return nsw_knn_join(
-                    self._ann_index,
-                    self._ann_cents,
+                return hnsw.nsw_knn_join(
+                    tier.index,
+                    tier.model,
                     queries,
                     k=k,
                     ef_search=meta["ef_search"],
@@ -2087,87 +2203,14 @@ class MemvidSpark:
         rebuild — the reference's finalize_indexes moment,
         mutation.rs:913-918), then evaluate the drift policy: if
         occupancy skew crossed the retrain bound (cells trained on an
-        old distribution no longer matching the data), retrain
-        centroids and rebuild — ``ivf_needs_retrain``'s engage/skew
-        knobs. Returns the policy stats. Called by :meth:`save`; safe
-        to call any time."""
-        if not self.ann_enabled():
-            raise ValueError("ANN tier not built: call build_ann_serving")
-        from .operators.hnsw import apply_delta_ivf, ivf_needs_retrain
-
-        meta = self._ann_meta
-        pending = getattr(self, "_ann_pending", [])
-        dels = None
-        if self._tombstones:
-            dels = self.spark.createDataFrame(
-                [(int(t),) for t in sorted(self._tombstones)], "vec_id long"
-            )
-        if pending or dels is not None:
-            # array<float>, NOT double: the track stores float32
-            # (EMB_SCHEMA), and the delta must round-trip through the
-            # same precision or tie-adjacent neighbor orders diverge
-            # from a rebuild over the persisted track. Arrow-path
-            # createDataFrame (pandas input): the python-list form
-            # parallelizes across 32 PYTHON slices and every delta-
-            # planning action re-pays ~5 cpu_s of worker roundtrips
-            # (measured round 10); the Arrow form is JVM-side batches
-            import pandas as _pd
-
-            delta = self.spark.createDataFrame(
-                _pd.DataFrame(
-                    {
-                        "vec_id": [int(fid) for fid, _ in pending],
-                        "embedding": [
-                            [float(x) for x in v] for _, v in pending
-                        ],
-                    }
-                ),
-                "vec_id long, embedding array<float>",
-            ).coalesce(max(1, min(32, len(pending) // 5000)))
-            # Arrow slices small frames into per-row partitions; a
-            # handful of python tasks beats 32 near-empty ones
-            self._ann_index = apply_delta_ivf(
-                self._ann_index,
-                delta,
-                self._ann_cents,
-                m=meta["m"],
-                ef_construction=meta["ef_construction"],
-                max_shard_rows=meta["max_shard_rows"],
-                deletes=dels,
-                n_hint=len(pending),
-            ).localCheckpoint()
-            self._ann_pending = []
-        auto = bool(meta.get("auto_cells", False))
-        tcr = int(meta.get("target_cell_rows", meta["max_shard_rows"]))
-        needs, stats = ivf_needs_retrain(
-            self._ann_index,
-            trained_cells=meta["n_cells"],
-            # auto-sized tiers also retrain when mean occupancy outgrows
-            # the target (the RESIZE moment); pinned tiers keep the
-            # legacy skew/drained-only policy
-            target_cell_rows=tcr if auto else None,
-        )
-        if needs:
-            # drift crossed the bound: retrain the coarse model on the
-            # current track and rebuild (vec.rs retrains its graph from
-            # scratch past the engage threshold; here it's a policy).
-            # An auto-sized tier re-sizes n_cells from the live count.
-            self.build_ann_serving(
-                n_cells=None if auto else meta["n_cells"],
-                m=meta["m"],
-                ef_construction=meta["ef_construction"],
-                ef_search=meta["ef_search"],
-                probes=meta["probes"],
-                max_shard_rows=meta["max_shard_rows"],
-                target_cell_rows=tcr,
-                min_cells=int(meta.get("min_cells", 4)),
-                max_cells=int(meta.get("max_cells", 4096)),
-                frame_model_min_cells=meta.get("frame_model_min_cells"),
-            )
-            stats["retrained"] = True
-            stats["n_cells"] = self._ann_meta["n_cells"]
-        meta["n_rows"] = int(stats["n_rows"])
-        return stats
+        old distribution no longer matching the data), retrain the
+        coarse model on the current track and rebuild (vec.rs retrains
+        its graph from scratch past the engage threshold; here it's a
+        policy) — ``ivf_needs_retrain``'s engage/skew knobs. An
+        auto-sized tier re-sizes n_cells from the live count. Returns
+        the policy stats. Called by :meth:`save`; safe to call any
+        time."""
+        return self._text_tier.refresh()
 
     CHUNK_MIN_CHARS = 2400  # preview_chunks threshold, mutation.rs:3070
 
@@ -2781,41 +2824,9 @@ class MemvidSpark:
             # one O(n) rebuild fixes both stale and orphaned sketch rows
             "sketches": lambda: self.finalize_indexes(variant or "small"),
         }
-        if self.ann_enabled():
-            meta = self._ann_meta
-            registry["ann_index"] = lambda: self.build_ann_serving(
-                n_cells=(
-                    None if meta.get("auto_cells") else meta["n_cells"]
-                ),
-                m=meta["m"],
-                ef_construction=meta["ef_construction"],
-                ef_search=meta["ef_search"],
-                probes=meta["probes"],
-                max_shard_rows=meta["max_shard_rows"],
-                target_cell_rows=meta.get(
-                    "target_cell_rows", meta["max_shard_rows"]
-                ),
-                frame_model_min_cells=meta.get("frame_model_min_cells"),
-            )
-            registry["ann_entry_cover"] = self._refresh_ann_entry_cover
-        if self.image_ann_enabled():
-            imeta = self._img_ann_meta
-            registry["img_ann_index"] = lambda: self.build_image_ann_serving(
-                n_cells=(
-                    None if imeta.get("auto_cells") else imeta["n_cells"]
-                ),
-                m=imeta["m"],
-                ef_construction=imeta["ef_construction"],
-                ef_search=imeta["ef_search"],
-                probes=imeta["probes"],
-                max_shard_rows=imeta["max_shard_rows"],
-                target_cell_rows=imeta.get(
-                    "target_cell_rows", imeta["max_shard_rows"]
-                ),
-                min_cells=int(imeta.get("min_cells", 4)),
-                max_cells=int(imeta.get("max_cells", 4096)),
-                frame_model_min_cells=imeta.get("frame_model_min_cells"),
-            )
+        for tier in (self._text_tier, self._image_tier):
+            if tier.built:
+                registry.update(tier.heal_registry())
         registry.update(rebuilders or {})
         healed: set[str] = set()
         for row in heal_plan(rep).collect():  # findings table — tiny
@@ -2833,18 +2844,6 @@ class MemvidSpark:
             if isinstance(rebuilt, DataFrame):
                 derived[row.table_name] = rebuilt
         return self._doctor_report(derived)
-
-    def _refresh_ann_entry_cover(self) -> None:
-        """Heal action for ``stale_entry_cover`` findings: rewrite the
-        entry covers of the served graph in place (one O(V+E) pass per
-        sub-graph, hnsw.refresh_entry_cover) — no rebuild, no retrain.
-        Upgrades a pre-entry-cover index so a severed island regains
-        reachability immediately instead of at its next delta."""
-        from .operators.hnsw import refresh_entry_cover
-
-        self._ann_index = refresh_entry_cover(
-            self._ann_index
-        ).localCheckpoint()
 
     def _doctor_report(
         self, derived: dict[str, DataFrame] | None = None
@@ -2873,59 +2872,9 @@ class MemvidSpark:
                 sketchable, {"sketches": sk}, frame_key=self.id_col
             ).filter(F.col("table_name") != "frames")
             rep = rep.unionByName(sk_rep)
-        if self.ann_enabled() and "ann_index" not in derived:
-            # the serving index covers exactly the ACTIVE vector track:
-            # a missing row = un-indexed vector, an orphan = a vector
-            # the track no longer holds (doctor_recovery.rs drops each
-            # index kind and expects doctor to flag + heal it)
-            indexed = self._ann_index.select(
-                F.col("vec_id").alias(self.id_col)
-            )
-            covered = self._ann_active_track().select(
-                F.col("vec_id").alias(self.id_col)
-            )
-            ann_rep = doctor_report(
-                covered, {"ann_index": indexed}, frame_key=self.id_col
-            ).filter(F.col("table_name") != "frames")
-            rep = rep.unionByName(ann_rep)
-            # entry-cover audit: a sub-graph with no entry=true row
-            # (any index persisted before the cover existed) searches
-            # on evenly spaced seeds alone and can return recall 0 on
-            # a directed-severed island — flag every such (cell, shard)
-            # so heal can rewrite covers WITHOUT a graph rebuild
-            idx = self._ann_index
-            if "entry" in idx.columns:
-                no_cover = (
-                    idx.groupBy("cell", "shard")
-                    .agg(F.max(F.col("entry").cast("int")).alias("e"))
-                    .filter(F.col("e") == 0)
-                )
-            else:  # legacy layout: the column itself is missing
-                no_cover = idx.select("cell", "shard").distinct()
-            rep = rep.unionByName(
-                no_cover.agg(F.count("*").cast("long").alias("n_affected"))
-                .select(
-                    F.lit("stale_entry_cover").alias("check"),
-                    F.lit("ann_entry_cover").alias("table_name"),
-                    "n_affected",
-                )
-            )
-        if self.image_ann_enabled() and "img_ann_index" not in derived:
-            # the image tier covers exactly the retained image media:
-            # a missing row = an un-indexed image (a put since the last
-            # build), an orphan = a deleted one — the drift signal that
-            # schedules a rebuild (the tier is point-in-time by design)
-            img_indexed = self._img_ann_index.select(
-                F.col("vec_id").alias(self.id_col)
-            )
-            img_covered = self.media("image").select(
-                F.col("media_id").alias(self.id_col)
-            )
-            img_rep = doctor_report(
-                img_covered, {"img_ann_index": img_indexed},
-                frame_key=self.id_col,
-            ).filter(F.col("table_name") != "frames")
-            rep = rep.unionByName(img_rep)
+        for tier in (self._text_tier, self._image_tier):
+            if tier.built and f"{tier.key}_index" not in derived:
+                rep = rep.unionByName(tier.audit(self.id_col))
         ids = frames_df.select(F.col(self.id_col).alias("k")).distinct()
         for name, vals in (
             ("tombstones", self._tombstones),
@@ -2982,7 +2931,6 @@ class MemvidSpark:
         artifacts — replay logs are action-count sized, never
         corpus-sized. Returns the number of actions saved."""
         import json
-        import os
 
         env = {"version": 1, "kind": "replay", "actions": self._replay}
         tmp = path + ".tmp"
@@ -3041,7 +2989,6 @@ class MemvidSpark:
         api.rs:1038-1106)."""
         import base64
         import json
-        import os
 
         os.makedirs(path, exist_ok=True)
         # Both tables write-to-temp then swap: the session's seed
@@ -3075,93 +3022,11 @@ class MemvidSpark:
                 os.path.join(path, "chunk_embeddings.parquet"),
             )
             self._chunk_emb_puts = []
-        # ANN serving tier: derived (rebuildable) but EXPENSIVE to
-        # derive, so like the reference's vector index it persists with
-        # the store — pending puts/tombstones apply incrementally first
-        # (touched cells only), then the cell-partitioned layout write-
-        # swaps so reopened stores get planning-time PartitionFilters
-        if self.ann_enabled():
-            self.refresh_ann_index()
-            self._ann_index = self._write_swap(
-                self._ann_index,
-                os.path.join(path, "ann_index.parquet"),
-                partition_by="cell",
-            )
-            from .operators.hnsw import (
-                CellIndexHandle,
-                CentroidFrame,
-                save_centroid_frame,
-            )
-
-            # post-save the persisted layout is the serving truth again:
-            # re-arm the directory-pruned request handle
-            self._ann_handle = CellIndexHandle(
-                self.spark, os.path.join(path, "ann_index.parquet")
-            )
-
-            cents_json = os.path.join(path, "ann_centroids.json")
-            frame_dir = os.path.join(path, "ann_centroids.frame")
-            if isinstance(self._ann_cents, CentroidFrame):
-                # past the broadcast bound the model persists the same
-                # way the index does: the (grp, cell, centroid) table
-                # as parquet written by the cluster + a KB manifest —
-                # never collected to the driver. The returned frame is
-                # re-rooted on the persisted files (releases trainer
-                # checkpoint blocks, same as every other saved track).
-                self._ann_cents = save_centroid_frame(
-                    self._ann_cents, frame_dir
-                )
-                if os.path.exists(cents_json):
-                    os.remove(cents_json)
-            else:
-                tmp = os.path.join(path, "ann_centroids.json.tmp")
-                with open(tmp, "w", encoding="utf-8") as f:
-                    # KB–MB scale below the frame bound (the ndarray
-                    # model); larger tiers persist as parquet above
-                    json.dump(self._ann_cents, f)
-                os.replace(tmp, cents_json)
-                import shutil as _sh
-
-                _sh.rmtree(frame_dir, ignore_errors=True)
-        # the cross-modal image tier persists the same way (the decode
-        # pass it saves per query is even pricier than vector scoring)
-        # — pending puts/tombstones apply incrementally first, exactly
-        # like the text tier above
-        if self.image_ann_enabled():
-            self.refresh_image_ann_index()
-            self._img_ann_index = self._write_swap(
-                self._img_ann_index,
-                os.path.join(path, "img_ann_index.parquet"),
-                partition_by="cell",
-            )
-            from .operators.hnsw import (
-                CellIndexHandle,
-                CentroidFrame,
-                save_centroid_frame,
-            )
-
-            self._img_ann_handle = CellIndexHandle(
-                self.spark, os.path.join(path, "img_ann_index.parquet")
-            )
-
-            img_json = os.path.join(path, "img_ann_centroids.json")
-            img_frame_dir = os.path.join(path, "img_ann_centroids.frame")
-            if isinstance(self._img_ann_cents, CentroidFrame):
-                # the image tier's frame model persists like the text
-                # tier's: cluster-written parquet + KB manifest
-                self._img_ann_cents = save_centroid_frame(
-                    self._img_ann_cents, img_frame_dir
-                )
-                if os.path.exists(img_json):
-                    os.remove(img_json)
-            else:
-                tmp = os.path.join(path, "img_ann_centroids.json.tmp")
-                with open(tmp, "w", encoding="utf-8") as f:
-                    json.dump(self._img_ann_cents, f)
-                os.replace(tmp, img_json)
-                import shutil as _sh
-
-                _sh.rmtree(img_frame_dir, ignore_errors=True)
+        # ANN serving tiers: pending mutations apply incrementally,
+        # then index and model persist (_AnnTier.save)
+        for tier in (self._text_tier, self._image_tier):
+            if tier.built:
+                tier.save(path)
         # the sketch track persists with the store (the reference ships
         # it inside the .mv2 container, sketch_track.rs) — unlike
         # postings it is maintained incrementally, not rebuilt per open
@@ -3209,9 +3074,9 @@ class MemvidSpark:
             "cards": [list(c) for c in getattr(self, "_cards", [])],
             "unenriched": sorted(self._unenriched),
             "enrich_queue": [int(x) for x in self._enrich_queue],
-            "ann": self._ann_meta if self.ann_enabled() else None,
+            "ann": self._text_tier.meta if self.ann_enabled() else None,
             "img_ann": (
-                self._img_ann_meta if self.image_ann_enabled() else None
+                self._image_tier.meta if self.image_ann_enabled() else None
             ),
         }
         tmp = os.path.join(path, "manifest.json.tmp")
@@ -3231,7 +3096,6 @@ class MemvidSpark:
         at the deleted pre-swap files), and return a fresh lazy reader
         rooted on the new files. ``partition_by`` hive-partitions the
         layout (the ANN index's ``cell=`` pruning key)."""
-        import os
         import shutil
 
         tmp = final_path + ".tmp"
@@ -3261,7 +3125,6 @@ class MemvidSpark:
         itself a table and dedup is the q24 anti-join."""
         import base64
         import json
-        import os
 
         with open(os.path.join(path, "manifest.json"), encoding="utf-8") as f:
             man = json.load(f)
@@ -3320,47 +3183,8 @@ class MemvidSpark:
         mv._enrich_pending = [int(x) for x in man.get("enrich_queue", [])]
         if man.get("vector_compression", "none") != "none":
             mv._vec_compression = man["vector_compression"]
-        ann_path = os.path.join(path, "ann_index.parquet")
-        if man.get("ann") and os.path.exists(ann_path):
-            spark.catalog.refreshByPath(ann_path)
-            mv._ann_meta = man["ann"]
-            mv._ann_index = spark.read.parquet(ann_path)
-            from .operators.hnsw import CellIndexHandle
-
-            mv._ann_handle = CellIndexHandle(spark, ann_path)
-            if man["ann"].get("model") == "frame":
-                from .operators.hnsw import load_centroid_frame
-
-                mv._ann_cents = load_centroid_frame(
-                    spark, os.path.join(path, "ann_centroids.frame")
-                )
-            else:
-                with open(
-                    os.path.join(path, "ann_centroids.json"),
-                    encoding="utf-8",
-                ) as f:
-                    mv._ann_cents = json.load(f)
-            mv._ann_pending = []
-        img_ann_path = os.path.join(path, "img_ann_index.parquet")
-        if man.get("img_ann") and os.path.exists(img_ann_path):
-            spark.catalog.refreshByPath(img_ann_path)
-            mv._img_ann_meta = man["img_ann"]
-            mv._img_ann_index = spark.read.parquet(img_ann_path)
-            from .operators.hnsw import CellIndexHandle
-
-            mv._img_ann_handle = CellIndexHandle(spark, img_ann_path)
-            if man["img_ann"].get("model") == "frame":
-                from .operators.hnsw import load_centroid_frame
-
-                mv._img_ann_cents = load_centroid_frame(
-                    spark, os.path.join(path, "img_ann_centroids.frame")
-                )
-            else:
-                with open(
-                    os.path.join(path, "img_ann_centroids.json"),
-                    encoding="utf-8",
-                ) as f:
-                    mv._img_ann_cents = json.load(f)
+        mv._text_tier.open(path, man.get("ann"))
+        mv._image_tier.open(path, man.get("img_ann"))
         if rebuild_dedup:
             # dedup registry stays DISTRIBUTED (mutation.rs:3302-3316
             # semantics, zero collect on the open path): a lazily
@@ -3599,20 +3423,6 @@ class MemvidSpark:
             # serving tiers (None when not built): mirrors the text
             # tier's n_cells surfacing; a 100 TB operator reads these
             # to schedule retrains next to the drift policy
-            "ann": (
-                {
-                    "n_cells": self._ann_meta["n_cells"],
-                    "n_rows": self._ann_meta["n_rows"],
-                }
-                if self.ann_enabled()
-                else None
-            ),
-            "img_ann": (
-                {
-                    "n_cells": self._img_ann_meta["n_cells"],
-                    "n_rows": self._img_ann_meta["n_rows"],
-                }
-                if self.image_ann_enabled()
-                else None
-            ),
+            "ann": self._text_tier.stats(),
+            "img_ann": self._image_tier.stats(),
         }

@@ -743,7 +743,8 @@ class CentroidFrame:
     cogroup). Cell ids are contiguous per group (offset + sub),
     assigned driver-side from the tiny count agg. The model persists
     as parquet + manifest (``save_centroid_frame`` /
-    ``load_centroid_frame``) so the facade and the streaming sink
+    ``load_centroid_frame``, behind ``save_coarse_model`` /
+    ``load_coarse_model``) so the facade and the streaming sink
     round-trip it without ever collecting the table."""
 
     def __init__(
@@ -980,6 +981,134 @@ def centroid_frame_manifest(path: str) -> dict:
 
     with open(os.path.join(path, "manifest.json"), encoding="utf-8") as f:
         return json.load(f)
+
+
+# Past this many cells the coarse model is a CentroidFrame: the
+# O(n_cells·dim) table is neither collected nor broadcast. At or below
+# it the model is a driver-side list of centroids, trained on the
+# byte-identical driver path, so existing stores and pins replay. Tests
+# that need the frame form at small scale lower this constant.
+FRAME_MODEL_MIN_CELLS = SCALED_TRAIN_MIN_CELLS
+
+
+def as_coarse_model(model):
+    """Either coarse-model form, normalized: a :class:`CentroidFrame`
+    as is, any (k, dim) array-like as a list of float lists (the form
+    the ``.json`` file holds)."""
+    if isinstance(model, CentroidFrame):
+        return model
+    return [[float(x) for x in c] for c in model]
+
+
+def train_coarse_model(
+    emb: DataFrame,
+    n_cells: int,
+    id_col: str = "vec_id",
+    n_hint: int | None = None,
+):
+    """Train a tier's coarse model, picking the form by size: a
+    :class:`CentroidFrame` past ``FRAME_MODEL_MIN_CELLS`` cells, a list
+    of centroids otherwise. Every consumer (``build_nsw_index_ivf``,
+    ``apply_delta_ivf``, ``nsw_knn_pruned``, ``nsw_knn_join``,
+    :func:`save_coarse_model`) takes either form."""
+    if n_cells > FRAME_MODEL_MIN_CELLS:
+        return train_cell_centroids_frame(
+            emb, n_cells=n_cells, id_col=id_col, n_hint=n_hint
+        )
+    return as_coarse_model(
+        train_cell_centroids(emb, n_cells=n_cells, id_col=id_col, n_hint=n_hint)
+    )
+
+
+def coarse_model_meta(model) -> dict:
+    """The tier-meta fields of either form: trained ``n_cells`` (may be
+    fewer than asked on degenerate data) and ``model`` kind."""
+    if isinstance(model, CentroidFrame):
+        return {"n_cells": int(model.n_cells), "model": "frame"}
+    return {"n_cells": len(model), "model": "ndarray"}
+
+
+def coarse_model_path(base: str) -> str | None:
+    """The file a model persisted under ``base`` lives in —
+    ``base.frame`` (directory) or ``base.json`` — or None."""
+    import os
+
+    if os.path.exists(os.path.join(base + ".frame", "manifest.json")):
+        return base + ".frame"
+    return base + ".json" if os.path.exists(base + ".json") else None
+
+
+def save_coarse_model(model, base: str, extra: dict | None = None):
+    """Persist either form under ``base``: a :class:`CentroidFrame` as
+    ``base.frame`` (:func:`save_centroid_frame`), a list model as
+    ``base.json`` (temp file + rename). The other form's file is
+    removed, so exactly one is on disk. ``extra`` fields (a sink's
+    model id) go into the frame manifest, or wrap the json list as
+    ``{"centroids": [...], **extra}``. Returns the model — a frame
+    re-rooted on its persisted parquet."""
+    import json
+    import os
+    import shutil
+
+    js, frame = base + ".json", base + ".frame"
+    if isinstance(model, CentroidFrame):
+        model = save_centroid_frame(model, frame, extra)
+        if os.path.exists(js):
+            os.remove(js)
+        return model
+    tmp = js + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump({"centroids": model, **extra} if extra else model, f)
+    os.replace(tmp, js)
+    shutil.rmtree(frame, ignore_errors=True)
+    return model
+
+
+def _persisted_model_path(base: str) -> str:
+    path = coarse_model_path(base)
+    if path is None:
+        raise FileNotFoundError(f"no coarse model persisted at {base}")
+    return path
+
+
+def _read_json_model(path: str) -> tuple[list, dict]:
+    """(centroids, extra fields) of a ``.json`` model file."""
+    import json
+
+    with open(path, encoding="utf-8") as f:
+        obj = json.load(f)
+    if isinstance(obj, dict):
+        return obj.pop("centroids"), obj
+    return obj, {}
+
+
+def load_coarse_model(spark, base: str):
+    """Re-open the model :func:`save_coarse_model` persisted under
+    ``base``, in the form it was saved."""
+    path = _persisted_model_path(base)
+    if path.endswith(".frame"):
+        return load_centroid_frame(spark, path)
+    return _read_json_model(path)[0]
+
+
+def coarse_model_manifest(base: str) -> dict:
+    """What the model under ``base`` records besides its centroids:
+    the ``extra`` fields it was saved with (a sink's model id), plus a
+    frame's own manifest fields. Empty for a plain json list."""
+    path = _persisted_model_path(base)
+    if path.endswith(".frame"):
+        return centroid_frame_manifest(path)
+    return _read_json_model(path)[1]
+
+
+def drop_coarse_model(base: str) -> None:
+    """Remove a model persisted under ``base``, in either form."""
+    import os
+    import shutil
+
+    shutil.rmtree(base + ".frame", ignore_errors=True)
+    if os.path.exists(base + ".json"):
+        os.remove(base + ".json")
 
 
 def _with_cell_frame(

@@ -8360,12 +8360,10 @@ def q187_hnsw_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
            true AS min_recall_ge
     FROM embeddings
     """,
-    "sweep-grade guard for the FACADE's frame-model serving wiring "
-    "(round 11 — VERDICT r10 #1: the operators could run on a "
-    "DataFrame-resident coarse model since round 10, but every serving "
-    "entry point still held the O(n_cells·dim) model as a driver "
-    "ndarray/list). build_ann_serving past frame_model_min_cells now "
-    "trains hnsw.CentroidFrame, save() persists it as parquet + "
+    "sweep-grade guard for the FACADE's frame-model serving wiring: "
+    "build_ann_serving past hnsw.FRAME_MODEL_MIN_CELLS trains "
+    "hnsw.CentroidFrame (the bound is lowered for the query so the "
+    "frame form runs at sweep scale), save() persists it as parquet + "
     "manifest (no json model file), open() reloads it, and "
     "search/delta route through the cogroup forms. The hashed row "
     "pins: n_tracked = the doubled vector track (DuckDB replays), "
@@ -8379,15 +8377,22 @@ def q187_hnsw_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cluster track.",
 )
 def q188_facade_frame_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from unittest import mock
+
+    from .operators import hnsw
+
+    # 16 cells past a bound of 8: every train (build and any drift
+    # retrain at save time) picks the frame form
+    with mock.patch.object(hnsw, "FRAME_MODEL_MIN_CELLS", 8):
+        return _q188_facade_frame_model(spark, sf_dir)
+
+
+def _q188_facade_frame_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
     from .api import MemvidSpark
-    from .operators.hnsw import (
-        CentroidFrame,
-        build_nsw_index_ivf,
-        nsw_knn,
-    )
+    from .operators.hnsw import CentroidFrame, build_nsw_index_ivf
     from .operators.knn import knn
 
     t = catalog.load(spark, sf_dir)
@@ -8417,9 +8422,7 @@ def q188_facade_frame_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     mv = MemvidSpark(spark)
     mv.add_embeddings(pairs)
-    mv.build_ann_serving(
-        n_cells=16, m=16, probes=4, frame_model_min_cells=8
-    )
+    mv.build_ann_serving(n_cells=16, m=16, probes=4)
     is_frame = isinstance(mv._ann_cents, CentroidFrame)
     qvec = dict(pairs)[3]
     before = [

@@ -27,14 +27,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.hnsw import (
     CELL_GRAPH_SCHEMA,
-    SCALED_TRAIN_MIN_CELLS,
-    CentroidFrame,
     apply_delta_ivf,
+    as_coarse_model,
     auto_n_cells,
-    centroid_frame_manifest,
+    coarse_model_manifest,
+    coarse_model_meta,
+    coarse_model_path,
+    drop_coarse_model,
     ivf_needs_retrain,
-    load_centroid_frame,
-    save_centroid_frame,
+    load_coarse_model,
+    save_coarse_model,
 )
 
 # the CDC row contract: an upsert carries the new embedding; a
@@ -67,35 +69,23 @@ class StreamingAnnMaintainer:
         target_cell_rows: int | None = 25000,
         min_cells: int = 4,
         max_cells: int = 4096,
-        frame_model_min_cells: int | None = None,
     ):
         self.store_dir = store_dir
         os.makedirs(store_dir, exist_ok=True)
-        # frame_model_min_cells: past this trained cell count the
-        # coarse model is a hnsw.CentroidFrame — retrain never collects
-        # the O(n_cells·dim) table, the model persists as parquet +
-        # manifest next to the index (``model_path``), and a restarted
-        # supervisor reconstructs the maintainer with centroids=None
-        # (loads the persisted model). Defaults to the distributed-
-        # trainer bound so ≤4096-cell sinks keep the byte-identical
-        # ndarray lifecycle.
-        self.frame_model_min_cells = (
-            frame_model_min_cells
-            if frame_model_min_cells is not None
-            else SCALED_TRAIN_MIN_CELLS
-        )
-        if isinstance(centroids, CentroidFrame):
-            self.centroids = centroids
-        elif centroids is None:
-            if not os.path.exists(self.model_path):
+        # either coarse-model form (hnsw.train_coarse_model picks it by
+        # size). The model persists next to the index (``model_base``)
+        # on first use and on every retrain, so a restarted supervisor
+        # reconstructs the maintainer with centroids=None.
+        if centroids is None:
+            if coarse_model_path(self.model_base) is None:
                 raise ValueError(
-                    "centroids=None needs a persisted frame model at "
-                    f"{self.model_path} (a restarted supervisor reopens "
+                    "centroids=None needs a persisted model at "
+                    f"{self.model_base} (a restarted supervisor reopens "
                     "the model the last retrain persisted)"
                 )
             self.centroids = None  # loaded lazily on first index() use
         else:
-            self.centroids = [[float(x) for x in c] for c in centroids]
+            self.centroids = as_coarse_model(centroids)
         self.m = m
         self.ef_construction = ef_construction
         self.max_shard_rows = max_shard_rows
@@ -108,10 +98,8 @@ class StreamingAnnMaintainer:
         # corpus and drags per-query probe CPU and per-delta rebuild
         # wall with it. The drift policy triggers the retrain when mean
         # occupancy outgrows this target (ivf_needs_retrain). None pins
-        # the trained cell count (legacy behavior). min/max_cells are
-        # the auto_n_cells clamp — past 4096 trained cells the trainer
-        # goes distributed (train_cell_centroids_scaled); the remaining
-        # size bound is the O(n_cells·dim) centroid broadcast.
+        # the trained cell count. min/max_cells are the auto_n_cells
+        # clamp.
         self.target_cell_rows = target_cell_rows
         self.min_cells = min_cells
         self.max_cells = max_cells
@@ -121,33 +109,43 @@ class StreamingAnnMaintainer:
         return os.path.join(self.store_dir, "ann_index.parquet")
 
     @property
-    def model_path(self) -> str:
-        """The persisted frame model (parquet + manifest) — present
-        only when the sink runs past ``frame_model_min_cells``."""
-        return os.path.join(self.store_dir, "ann_model.frame")
+    def model_base(self) -> str:
+        """Where the coarse model persists: ``ann_model.frame`` or
+        ``ann_model.json`` (hnsw.save_coarse_model)."""
+        return os.path.join(self.store_dir, "ann_model")
 
     # marker file INSIDE the index directory naming the model the
     # index was built/delta'd against (underscore prefix: Spark's
-    # parquet reader ignores it). The swap sequence is
+    # parquet reader ignores it). The retrain sequence is
     #   write model → .next  →  swap index (carrying the marker)
     #   →  promote model .next → live
     # so every crash window recovers forward: a live index whose
     # marker doesn't match the live model promotes the matching .next
-    # (_recover_swap) — the delta ≡ rebuild contract requires the
+    # (_recover_model) — the delta ≡ rebuild contract requires the
     # SERVED index and the ASSIGNING model to be the same generation.
     _MODEL_MARKER = "_MODEL_ID"
 
     def _coarse_model(self, spark: SparkSession):
+        """The assigning model: reloaded from disk after a restart or a
+        recovery promote; a caller-passed model persists on first use
+        under a fresh id, so every index on disk names a model a
+        restarted supervisor can reload."""
+        import uuid
+
         if self.centroids is None:
-            self.centroids = load_centroid_frame(spark, self.model_path)
+            self.centroids = load_coarse_model(spark, self.model_base)
+        elif coarse_model_path(self.model_base) is None:
+            self.centroids = save_coarse_model(
+                self.centroids,
+                self.model_base,
+                extra={"model_id": uuid.uuid4().hex},
+            )
         return self.centroids
 
     def n_cells_trained(self, spark: SparkSession | None = None) -> int:
         if self.centroids is None and spark is not None:
             self._coarse_model(spark)
-        if isinstance(self.centroids, CentroidFrame):
-            return int(self.centroids.n_cells)
-        return len(self.centroids)
+        return coarse_model_meta(self.centroids)["n_cells"]
 
     def index(self, spark: SparkSession) -> DataFrame:
         """The persisted serving index (empty graph before the first
@@ -197,44 +195,42 @@ class StreamingAnnMaintainer:
         self._recover_model()
 
     def _recover_model(self) -> None:
-        """Reconcile the persisted frame model with the live index's
-        generation marker. A frame-mode retrain writes the NEW model to
-        ``model_path + '.next'`` BEFORE swapping the index (whose
+        """Reconcile the persisted model with the live index's
+        generation marker. A retrain writes the NEW model to
+        ``model_base + '.next'`` BEFORE swapping the index (whose
         directory carries the model id it was built against), then
         promotes ``.next`` → live; a crash between those two steps
-        leaves a live index pointing at a model the live dir doesn't
+        leaves a live index pointing at a model the live slot doesn't
         hold yet — promote the matching ``.next`` forward. A marker
-        that matches the live model means ``.next`` (if any) is stale
-        garbage. Indexes without a marker (the ndarray lifecycle, or
-        a frame bootstrap before any retrain) leave the model alone."""
-        import shutil
-
+        that matches the live model means ``.next`` is stale garbage.
+        Without a ``.next`` there is nothing to reconcile."""
         marker = os.path.join(self.index_path, self._MODEL_MARKER)
-        if not os.path.exists(marker):
+        nxt = self.model_base + ".next"
+        if not os.path.exists(marker) or coarse_model_path(nxt) is None:
             return
         with open(marker, encoding="utf-8") as f:
             want = f.read().strip()
-        nxt = self.model_path + ".next"
-        live_id = None
-        if os.path.exists(self.model_path):
-            live_id = centroid_frame_manifest(self.model_path).get(
-                "model_id"
-            )
-        if live_id == want:
-            shutil.rmtree(nxt, ignore_errors=True)
-            return
-        if (
-            os.path.exists(os.path.join(nxt, "manifest.json"))
-            and centroid_frame_manifest(nxt).get("model_id") == want
+        live = coarse_model_path(self.model_base)
+        if live is not None and (
+            coarse_model_manifest(self.model_base).get("model_id") == want
         ):
-            old = self.model_path + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(self.model_path):
-                os.replace(self.model_path, old)
-            os.replace(nxt, self.model_path)
-            shutil.rmtree(old, ignore_errors=True)
+            drop_coarse_model(nxt)
+        elif coarse_model_manifest(nxt).get("model_id") == want:
+            self._promote_next()
             # the in-memory model (if any) is the previous generation
             self.centroids = None
+
+    def _promote_next(self) -> None:
+        """Rename the ``.next`` model over the live one, either form:
+        rename-aside, so no window leaves a half-moved live model."""
+        old = self.model_base + ".old"
+        drop_coarse_model(old)
+        live = coarse_model_path(self.model_base)
+        if live is not None:
+            os.replace(live, old + os.path.splitext(live)[1])
+        nxt = coarse_model_path(self.model_base + ".next")
+        os.replace(nxt, self.model_base + os.path.splitext(nxt)[1])
+        drop_coarse_model(old)
 
     @staticmethod
     def _last_state(batch_df: DataFrame) -> DataFrame:
@@ -331,11 +327,6 @@ class StreamingAnnMaintainer:
         spark = batch_df.sparkSession
         idx = self.index(spark)  # runs swap + model recovery first
         model = self._coarse_model(spark)
-        model_id = None
-        if isinstance(model, CentroidFrame):
-            self._ensure_frame_persisted()
-            model = self.centroids
-            model_id = self._frame_model_id()
         last = self._last_state(batch_df).localCheckpoint()
         ups = last.filter(~F.col("deleted")).select("vec_id", "embedding")
         dels = last.filter(F.col("deleted")).select("vec_id")
@@ -351,7 +342,7 @@ class StreamingAnnMaintainer:
                     max_shard_rows=self.max_shard_rows,
                     deletes=dels,
                 ),
-                model_id=model_id,
+                model_id=coarse_model_manifest(self.model_base).get("model_id"),
             )
         else:
             rebuilt, touched, built = apply_delta_ivf_parts(
@@ -383,26 +374,6 @@ class StreamingAnnMaintainer:
         if self.auto_retrain and self.drift(spark)[0]:
             self.retrain(spark)
 
-    def _frame_model_id(self) -> str | None:
-        if os.path.exists(self.model_path):
-            return centroid_frame_manifest(self.model_path).get("model_id")
-        return None
-
-    def _ensure_frame_persisted(self) -> None:
-        """A caller-passed in-memory CentroidFrame persists on first
-        use (fresh model id) — every frame-mode index on disk must
-        name a model the supervisor can reload after a restart."""
-        import uuid
-
-        if isinstance(self.centroids, CentroidFrame) and not os.path.exists(
-            self.model_path
-        ):
-            self.centroids = save_centroid_frame(
-                self.centroids,
-                self.model_path,
-                extra={"model_id": uuid.uuid4().hex},
-            )
-
     def drift(self, spark: SparkSession) -> tuple[bool, dict]:
         """The centroid-drift retrain policy over the live index —
         skew, drained cells, AND (with target_cell_rows set) mean
@@ -425,26 +396,32 @@ class StreamingAnnMaintainer:
         the retrain RE-SIZES the cell count from the live row count
         (auto_n_cells), so continuous ingest grows the CELL COUNT, not
         the cell size — the term that otherwise scales per-query and
-        per-delta work with the corpus.
+        per-delta work with the corpus. The model form follows the new
+        cell count (hnsw.train_coarse_model); a frame model is never
+        collected.
 
-        Past ``frame_model_min_cells`` the retrain routes through the
-        FRAME lifecycle (``_retrain_frame``): the model is trained,
-        persisted and consumed as a DataFrame — no O(n_cells·dim)
-        collect anywhere in the retrain, the term the ndarray
-        lifecycle re-paid every retrain (VERDICT r10 #1).
+        One crash-safe sequence for either form: write the model to
+        ``model_base + '.next'``, build + swap the index stamped with
+        the new model id, then promote ``.next`` → live. Before the
+        index swap the old (index, model) pair is intact; between the
+        swap and the promote, ``_recover_model`` promotes the matching
+        ``.next`` forward.
 
         The rebuild input is the persisted parquet index READ DIRECTLY
-        — never localCheckpointed (VERDICT r9 #2: pinning the whole
-        corpus in block-manager storage for the rebuild's duration is
-        exactly the O(corpus) executor-memory term the tier exists to
-        avoid). Safe because every read of the old files completes
-        while they are still live: the trainer's sample and the count
-        run up front, and ``_swap`` fully materializes the new graph
-        into ``.tmp`` before any rename touches the old directory."""
-        import shutil
+        — never localCheckpointed: pinning the whole corpus in
+        block-manager storage for the rebuild's duration is exactly the
+        O(corpus) executor-memory term the tier exists to avoid. Safe
+        because every read of the old files completes while they are
+        still live: the trainer's sample and the count run up front,
+        and ``_swap`` fully materializes the new graph into ``.tmp``
+        before any rename touches the old directory."""
+        import uuid
 
-        from ..operators.hnsw import build_nsw_index_ivf, train_cell_centroids
+        from ..operators.hnsw import build_nsw_index_ivf, train_coarse_model
 
+        # index() reconciles any earlier crash first, so the fresh
+        # .next below cannot be mistaken for stale garbage (and _swap
+        # skips its own recovery pass)
         emb = self.index(spark).select("vec_id", "embedding")
         if self.target_cell_rows is not None:
             n = emb.count()
@@ -454,73 +431,23 @@ class StreamingAnnMaintainer:
             )
         else:
             n, n_cells = None, self.n_cells_trained(spark)
-        if n_cells > self.frame_model_min_cells:
-            self._retrain_frame(spark, emb, n_cells, n)
-            return
-        self.centroids = [
-            [float(x) for x in c]
-            for c in train_cell_centroids(emb, n_cells=n_cells, n_hint=n)
-        ]
-        self._swap(
-            spark,
-            build_nsw_index_ivf(
-                emb,
-                self.centroids,
-                m=self.m,
-                ef_construction=self.ef_construction,
-                max_shard_rows=self.max_shard_rows,
-                n_hint=n,
-            ),
-        )
-        # left frame mode (corpus shrank below the bound): the new
-        # index carries no marker, so the persisted model dirs are
-        # garbage — clear AFTER the swap (clearing before it would
-        # strand a crash-recovered marker index with no model to load)
-        for p in (self.model_path, self.model_path + ".next"):
-            shutil.rmtree(p, ignore_errors=True)
-
-    def _retrain_frame(
-        self, spark: SparkSession, emb: DataFrame, n_cells: int, n: int | None
-    ) -> None:
-        """Frame-lifecycle retrain: train the model distributed, write
-        it to ``model_path + '.next'``, build + swap the index stamped
-        with the new model id, then promote ``.next`` → live. Every
-        crash window recovers: before the index swap the old
-        (index, model) pair is intact and the orphan ``.next`` is
-        cleared by ``_recover_model``; between the index swap and the
-        model promote, ``_recover_model`` promotes the matching
-        ``.next`` forward. No step collects the centroid table."""
-        import shutil
-        import uuid
-
-        from ..operators.hnsw import (
-            build_nsw_index_ivf,
-            train_cell_centroids_frame,
-        )
-
-        self._recover_swap()  # start from a reconciled state: the
-        # fresh .next written below must not look like stale garbage
-        # to a recovery pass, so _swap below skips its own recovery
         model_id = uuid.uuid4().hex
-        cf = train_cell_centroids_frame(emb, n_cells=n_cells, n_hint=n)
-        nxt = self.model_path + ".next"
-        cf = save_centroid_frame(cf, nxt, extra={"model_id": model_id})
+        model = save_coarse_model(
+            train_coarse_model(emb, n_cells, n_hint=n),
+            self.model_base + ".next",
+            extra={"model_id": model_id},
+        )
         new_index = build_nsw_index_ivf(
             emb,
-            cf,
+            model,
             m=self.m,
             ef_construction=self.ef_construction,
             max_shard_rows=self.max_shard_rows,
             n_hint=n,
         )
         self._swap(spark, new_index, model_id=model_id, recover=False)
-        old = self.model_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(self.model_path):
-            os.replace(self.model_path, old)
-        os.replace(nxt, self.model_path)
-        shutil.rmtree(old, ignore_errors=True)
-        self.centroids = load_centroid_frame(spark, self.model_path)
+        self._promote_next()
+        self.centroids = load_coarse_model(spark, self.model_base)
 
     def retrain_and_swap(self, spark: SparkSession, force: bool = False) -> dict:
         """Out-of-band retrain for a SUPERVISOR process — the serving

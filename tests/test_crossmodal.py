@@ -246,54 +246,10 @@ class TestImageAnnServing:
             store._tombstones.discard(victim)
 
 
-def test_doctor_audits_and_heals_image_ann_index(spark):
-    """doctor() audits the image ANN tier against the retained image
-    media (missing = un-indexed put since the last build, orphaned =
-    deleted image still served) and heal=True routes through the
-    registered rebuilder — the same drop-then-heal contract as the
-    text tier (doctor_recovery.rs:194-717)."""
-    from pyspark.sql import functions as F
-
-    from memvid_spark.api import MemvidSpark
-
-    mv = MemvidSpark(spark)
-    rng = np.random.default_rng(31)
-    ids = []
-    for i in range(6):
-        px = rng.integers(0, 256, (4 + i % 3, 5, 3), dtype=np.uint8)
-        ids.append(
-            mv.put_bytes(bytes(png_encode(px)), uri=f"mv2://d/{i}.png",
-                         dedup=False)
-        )
-    mv.build_image_ann_serving(m=8, ef_construction=60)
-    rep = {
-        (r.check, r.table_name): r.n_affected for r in mv.doctor().collect()
-    }
-    assert rep[("missing", "img_ann_index")] == 0
-    assert rep[("orphaned", "img_ann_index")] == 0
-    # a put AFTER the build is a missing row; heal rebuilds the tier
-    extra = mv.put_bytes(
-        bytes(png_encode(rng.integers(0, 256, (4, 4, 3), dtype=np.uint8))),
-        uri="mv2://d/extra.png", dedup=False,
-    )
-    assert extra is not None
-    rep = {
-        (r.check, r.table_name): r.n_affected for r in mv.doctor().collect()
-    }
-    assert rep[("missing", "img_ann_index")] == 1
-    healed = {
-        (r.check, r.table_name): r.n_affected
-        for r in mv.doctor(heal=True).collect()
-    }
-    assert healed[("missing", "img_ann_index")] == 0
-    assert mv._img_ann_index.filter(F.col("vec_id") == extra).count() > 0
-
-
 def test_image_ann_incremental_delta_equals_rebuild(spark):
-    """Round-11 (VERDICT r10 #2): media mutations apply to the image
-    ANN tier INCREMENTALLY — refresh_image_ann_index embeds ONLY the
-    pending payloads and routes puts + tombstones through
-    apply_delta_ivf. Pins: (1) the maintained graph equals one fresh
+    """Media mutations apply to the image ANN tier INCREMENTALLY —
+    refresh_image_ann_index embeds ONLY the pending payloads and routes
+    puts + tombstones through apply_delta_ivf. Pins: (1) the maintained graph equals one fresh
     build over the retained image media with the same centroids,
     row-for-row; (2) doctor reports no drift after the refresh;
     (3) save() applies the delta (reopened store serves the new image
@@ -423,81 +379,3 @@ def test_exact_image_search_caches_embed_pass(spark, monkeypatch):
     mv.delete(new_id)
     got = {r.media_id for r in mv.search_images("q", k=11).collect()}
     assert calls["n"] == 3 and new_id not in got
-
-
-def test_image_ann_frame_model_round_trip(spark, tmp_path):
-    """Round-11: the IMAGE tier's coarse model rides the same
-    DataFrame-resident (CentroidFrame) path as the text tier — past
-    frame_model_min_cells nothing collects or broadcasts the centroid
-    table. Pins: (1) the build keeps a frame model (meta + type);
-    (2) a media delta on the frame path equals one fresh build over
-    the retained media with the SAME persisted model; (3) save()
-    persists parquet+manifest (no json) and open() reloads a frame;
-    (4) the reopened store delta-applies a further mutation and
-    doctor reports no drift."""
-    from pyspark.sql import functions as F
-
-    from memvid_spark.api import MemvidSpark
-    from memvid_spark.operators.hnsw import CentroidFrame, build_nsw_index_ivf
-
-    mv = MemvidSpark(spark)
-    rng = np.random.default_rng(47)
-    ids = []
-    for i in range(40):
-        px = rng.integers(0, 256, (4 + i % 3, 5 + i % 2, 3), dtype=np.uint8)
-        ids.append(
-            mv.put_bytes(bytes(png_encode(px)), uri=f"mv2://fr/{i}.png",
-                         dedup=False)
-        )
-    mv.build_image_ann_serving(
-        m=8, ef_construction=60, target_cell_rows=2,
-        frame_model_min_cells=4,
-    )
-    assert mv._img_ann_meta["model"] == "frame"
-    assert isinstance(mv._img_ann_cents, CentroidFrame)
-    # (2) mutations -> incremental delta == rebuild WITHIN the frame path
-    new_id = mv.put_bytes(
-        bytes(png_encode(rng.integers(0, 256, (5, 6, 3), dtype=np.uint8))),
-        uri="mv2://fr/new.png", dedup=False,
-    )
-    mv.delete(ids[5])
-    mv.refresh_image_ann_index()
-    truth_emb = xm.embed_images(mv.media("image")).select(
-        F.col("media_id").alias("vec_id"),
-        F.col("emb").cast("array<double>").alias("embedding"),
-    )
-    truth = build_nsw_index_ivf(
-        truth_emb, mv._img_ann_cents, m=8, ef_construction=60
-    )
-    key = lambda df: sorted(  # noqa: E731
-        (r.cell, r.shard, r.vec_id, tuple(r.neighbors), bool(r.entry))
-        for r in df.collect()
-    )
-    assert key(mv._img_ann_index) == key(truth)
-    # (3) persistence: frame dir + no json; reopen loads a frame model
-    import os
-
-    path = str(tmp_path / "store")
-    mv.save(path)
-    assert os.path.exists(
-        os.path.join(path, "img_ann_centroids.frame", "manifest.json")
-    )
-    assert not os.path.exists(os.path.join(path, "img_ann_centroids.json"))
-    re = MemvidSpark.open(spark, path)
-    assert re._img_ann_meta["model"] == "frame"
-    assert isinstance(re._img_ann_cents, CentroidFrame)
-    served = {int(r.vec_id) for r in re._img_ann_index.select("vec_id").collect()}
-    assert new_id in served and ids[5] not in served
-    # (4) a further mutation on the REOPENED store delta-applies
-    late = re.put_bytes(
-        bytes(png_encode(rng.integers(0, 256, (6, 6, 3), dtype=np.uint8))),
-        uri="mv2://fr/late.png", dedup=False,
-    )
-    re.refresh_image_ann_index()
-    served2 = {int(r.vec_id) for r in re._img_ann_index.select("vec_id").collect()}
-    assert late in served2
-    rep = {
-        (r.check, r.table_name): r.n_affected for r in re.doctor().collect()
-    }
-    assert rep[("missing", "img_ann_index")] == 0
-    assert rep[("orphaned", "img_ann_index")] == 0

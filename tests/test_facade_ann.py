@@ -1,6 +1,7 @@
-"""Facade ANN serving tier: build_ann_serving / search_embeddings(ann=)
+"""Facade ANN serving tiers: build_ann_serving / search_embeddings(ann=)
 / incremental save-time deltas / vacuum-routed maintenance / doctor
-audit + heal.
+audit + heal. The text and image tiers share one lifecycle; tests of
+that lifecycle run over both.
 
 Reference seams: HNSW engaged at >= 1000 vectors (src/vec.rs:22-23) as
 the brute-vs-ANN routing policy; recall >= 0.8 @ k=10 vs brute force
@@ -12,11 +13,19 @@ the brute-vs-ANN routing policy; recall >= 0.8 @ k=10 vs brute force
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from memvid_spark.api import MemvidSpark
+from memvid_spark.operators import crossmodal as xm
+from memvid_spark.operators import hnsw
+from memvid_spark.operators.hnsw import CentroidFrame, build_nsw_index_ivf
+from memvid_spark.sources.image import png_encode
 
 
 def _unit_blob_pairs(n_blobs=4, per_blob=300, dim=6, start_id=0):
@@ -48,6 +57,99 @@ def _store_with_vectors(spark, n_blobs=4, per_blob=300):
 
 def _qvec(pairs, fid):
     return next(v for f, v in pairs if f == fid)
+
+
+def _report(mv, heal=False):
+    return {
+        (r.check, r.table_name): r.n_affected
+        for r in mv.doctor(heal=heal).collect()
+    }
+
+
+def _graph_key(df):
+    return sorted(
+        (r.cell, r.shard, r.vec_id, tuple(r.neighbors), bool(r.entry))
+        for r in df.collect()
+    )
+
+
+TIERS = ("text", "image")
+
+
+class _Tier:
+    """Drives one serving tier of a store through the facade: the text
+    tier over stored vectors, the image tier over PNG puts. The two
+    differ only in how items enter the store and in the names of the
+    entry points, files and doctor tables."""
+
+    def __init__(self, spark, kind, mv=None, pool=None, rng=None):
+        self.spark, self.kind = spark, kind
+        self.mv = mv if mv is not None else MemvidSpark(spark)
+        self.key = "ann" if kind == "text" else "img_ann"
+        # well-separated unique vectors, handed out in order
+        self.pool = pool if pool is not None else iter(
+            _unit_blob_pairs(n_blobs=6, per_blob=260)
+        )
+        self.rng = rng if rng is not None else np.random.default_rng(31)
+
+    def add(self, n=1):
+        if self.kind == "text":
+            pairs = [next(self.pool) for _ in range(n)]
+            self.mv.add_embeddings(pairs)
+            return [f for f, _ in pairs]
+        ids = []
+        for _ in range(n):
+            shape = (4 + int(self.rng.integers(0, 3)), 5, 3)
+            px = self.rng.integers(0, 256, shape, dtype=np.uint8)
+            ids.append(
+                self.mv.put_bytes(bytes(png_encode(px)), dedup=False)
+            )
+        return ids
+
+    def build(self, **kw):
+        build = (
+            self.mv.build_ann_serving
+            if self.kind == "text"
+            else self.mv.build_image_ann_serving
+        )
+        build(m=8, ef_construction=60, **kw)
+
+    def refresh(self):
+        if self.kind == "text":
+            return self.mv.refresh_ann_index()
+        return self.mv.refresh_image_ann_index()
+
+    def reopen(self, path):
+        mv = MemvidSpark.open(self.spark, path)
+        return _Tier(self.spark, self.kind, mv, self.pool, self.rng)
+
+    @property
+    def index(self):
+        return getattr(self.mv, f"_{self.key}_index")
+
+    @index.setter
+    def index(self, df):
+        setattr(self.mv, f"_{self.key}_index", df)
+
+    @property
+    def model(self):
+        return getattr(self.mv, f"_{self.key}_cents")
+
+    @property
+    def meta(self):
+        return getattr(self.mv, f"_{self.key}_meta")
+
+    def truth(self):
+        """(vec_id, embedding) the tier must index right now."""
+        if self.kind == "text":
+            return self.mv._ann_active_track()
+        return xm.embed_images(self.mv.media("image")).select(
+            F.col("media_id").alias("vec_id"),
+            F.col("emb").cast("array<double>").alias("embedding"),
+        )
+
+    def served(self):
+        return {int(r.vec_id) for r in self.index.select("vec_id").collect()}
 
 
 def test_ann_search_recall_vs_exact(spark):
@@ -146,33 +248,47 @@ def test_delete_vacuum_routes_index_maintenance(spark):
     }
 
 
-def test_doctor_audits_and_heals_ann_index(spark):
-    """doctor() flags a hole in the served index as missing rows;
-    heal=True routes through the registered rebuilder and the re-audit
-    comes back clean (doctor_recovery.rs:194-717 drop-then-heal)."""
-    pairs = _unit_blob_pairs(n_blobs=3, per_blob=40)
-    mv = MemvidSpark(spark)
-    mv.put("doc zero")  # a frame so the frame-log checks have rows
-    mv.add_embeddings(pairs[1:])
-    mv.build_ann_serving(n_cells=3, m=8, ef_construction=60)
-    clean = {
-        (r.check, r.table_name): r.n_affected for r in mv.doctor().collect()
-    }
-    assert clean[("missing", "ann_index")] == 0
-    assert clean[("orphaned", "ann_index")] == 0
-    # corrupt: drop one indexed vector's row
-    victim = int(pairs[1][0])
-    mv._ann_index = mv._ann_index.filter(F.col("vec_id") != victim)
-    rep = {
-        (r.check, r.table_name): r.n_affected for r in mv.doctor().collect()
-    }
-    assert rep[("missing", "ann_index")] == 1
-    healed = {
-        (r.check, r.table_name): r.n_affected
-        for r in mv.doctor(heal=True).collect()
-    }
+@pytest.mark.parametrize("kind", TIERS)
+def test_doctor_audits_and_heals_ann_tier(spark, kind):
+    """doctor() flags a hole in the served index and an item put since
+    the last refresh as missing rows; heal=True routes through the
+    registered rebuilder and the re-audit comes back clean
+    (doctor_recovery.rs:194-717 drop-then-heal). One audit for both
+    tiers; the image audit checks ids only, never decoding payloads."""
+    t = _Tier(spark, kind)
+    t.mv.put("doc zero")  # a frame so the frame-log checks have rows
+    ids = t.add(12)
+    t.build(n_cells=3)
+    table = f"{t.key}_index"
+    clean = _report(t.mv)
+    assert clean[("missing", table)] == 0
+    assert clean[("orphaned", table)] == 0
+    # corrupt: drop one indexed row
+    victim = ids[1]
+    t.index = t.index.filter(F.col("vec_id") != victim)
+    assert _report(t.mv)[("missing", table)] == 1
+    # an item put after the build, not yet refreshed, is missing too
+    (extra,) = t.add(1)
+    assert _report(t.mv)[("missing", table)] == 2
+    healed = _report(t.mv, heal=True)
+    assert healed[("missing", table)] == 0
+    assert healed[("orphaned", table)] == 0
+    assert {victim, extra} <= t.served()
+
+
+def test_doctor_heal_keeps_persisted_cell_clamp(spark):
+    """The heal rebuild re-sizes an auto-sized tier within the clamp it
+    was built with, like the drift retrain does — not the default
+    clamp."""
+    t = _Tier(spark, "text")
+    t.add(120)
+    t.build(min_cells=2, max_cells=2)
+    assert t.meta["n_cells"] == 2 and t.meta["auto_cells"] is True
+    t.add(10)  # no refresh: the index is flagged missing
+    assert _report(t.mv)[("missing", "ann_index")] == 10
+    healed = _report(t.mv, heal=True)
     assert healed[("missing", "ann_index")] == 0
-    assert healed[("orphaned", "ann_index")] == 0
+    assert t.meta["n_cells"] == 2
 
 
 def test_refresh_drift_policy_retrains_on_skew(spark):
@@ -297,36 +413,28 @@ def test_refresh_resizes_auto_tier_when_corpus_outgrows_cells(spark):
     assert len(approx & exact) / 10 >= 0.8
 
 
-def test_doctor_flags_and_heals_stale_entry_cover(spark):
+@pytest.mark.parametrize("kind", TIERS)
+def test_doctor_heals_stale_entry_cover(spark, kind):
     """A legacy (pre-entry-cover) served index is a silent recall
-    hazard; doctor() now flags every cover-less sub-graph and heal
+    hazard; doctor() flags every cover-less sub-graph and heal
     rewrites the covers in place — no rebuild, no retrain, index rows
     otherwise untouched."""
-    pairs = _unit_blob_pairs(n_blobs=3, per_blob=40)
-    mv = MemvidSpark(spark)
-    mv.put("doc zero")
-    mv.add_embeddings(pairs)
-    mv.build_ann_serving(n_cells=3, m=8, ef_construction=60)
-    n_shards = mv._ann_index.select("cell", "shard").distinct().count()
-    rows_before = mv._ann_index.count()
-    clean = {
-        (r.check, r.table_name): r.n_affected for r in mv.doctor().collect()
-    }
-    assert clean[("stale_entry_cover", "ann_entry_cover")] == 0
+    t = _Tier(spark, kind)
+    t.mv.put("doc zero")
+    t.add(12)
+    t.build(n_cells=3)
+    cover = f"{t.key}_entry_cover"
+    n_shards = t.index.select("cell", "shard").distinct().count()
+    rows_before = t.index.count()
+    assert _report(t.mv)[("stale_entry_cover", cover)] == 0
     # simulate the legacy store: entry column absent entirely
-    mv._ann_index = mv._ann_index.drop("entry").localCheckpoint()
-    rep = {
-        (r.check, r.table_name): r.n_affected for r in mv.doctor().collect()
-    }
-    assert rep[("stale_entry_cover", "ann_entry_cover")] == n_shards
-    healed = {
-        (r.check, r.table_name): r.n_affected
-        for r in mv.doctor(heal=True).collect()
-    }
-    assert healed[("stale_entry_cover", "ann_entry_cover")] == 0
-    assert "entry" in mv._ann_index.columns
-    assert mv._ann_index.count() == rows_before
-    assert mv._ann_index.filter(F.col("entry")).count() >= n_shards
+    t.index = t.index.drop("entry").localCheckpoint()
+    assert _report(t.mv)[("stale_entry_cover", cover)] == n_shards
+    healed = _report(t.mv, heal=True)
+    assert healed[("stale_entry_cover", cover)] == 0
+    assert "entry" in t.index.columns
+    assert t.index.count() == rows_before
+    assert t.index.filter(F.col("entry")).count() >= n_shards
 
 
 def test_ask_routes_vector_list_through_serving_tier(spark):
@@ -459,99 +567,118 @@ def test_stats_surfaces_serving_tier_meta(spark):
     assert st["img_ann"] is None
 
 
-def test_frame_model_facade_round_trip(spark, tmp_path):
-    """Round-11 serving wiring: above ``frame_model_min_cells`` the
-    facade's coarse model is a hnsw.CentroidFrame — trained, assigned,
-    searched and persisted WITHOUT ever collecting the centroid table
-    to the driver. Pins: (1) the tier builds and serves with the
-    recall bound; (2) save() persists the model as parquet + manifest
-    (no ann_centroids.json) and open() serves IDENTICAL results;
-    (3) save-time deltas (add_embeddings + delete) keep delta ==
-    rebuild semantics on the frame path; (4) the batch join serves
-    through the frame probe."""
-    import os
+@pytest.mark.parametrize("kind", TIERS)
+def test_frame_model_round_trip(spark, tmp_path, monkeypatch, kind):
+    """Past hnsw.FRAME_MODEL_MIN_CELLS (lowered here) a tier's coarse
+    model is a hnsw.CentroidFrame — trained, assigned, searched and
+    persisted WITHOUT ever collecting the centroid table to the
+    driver. Pins: (1) the build keeps a frame model (meta + type);
+    (2) mutations on the frame path delta-apply to the graph one fresh
+    build with the SAME model gives, row for row; (3) save() persists
+    parquet + manifest (no json) and open() reloads a frame serving
+    the same graph; (4) the reopened store delta-applies a further
+    mutation and doctor reports no drift. The text tier (above the
+    engage bound) also serves single and batch queries through the
+    frame probe, identically after the round trip."""
+    monkeypatch.setattr(hnsw, "FRAME_MODEL_MIN_CELLS", 8)
+    t = _Tier(spark, kind)
+    ids = t.add(1500 if kind == "text" else 40)
+    t.build(n_cells=12, probes=4)
+    assert isinstance(t.model, CentroidFrame)
+    assert t.meta["model"] == "frame"
+    assert t.meta["n_cells"] == t.model.n_cells
 
-    from memvid_spark.operators.hnsw import CentroidFrame
+    def search(mv):
+        q = mv.frame_embedding(ids[3])
+        return [
+            (r.vec_id, r.score, r.rank)
+            for r in mv.search_embeddings(q, k=10, ann=True).collect()
+        ]
 
-    pairs = _unit_blob_pairs(n_blobs=6, per_blob=250)  # 1500 rows
-    mv = MemvidSpark(spark)
-    mv.add_embeddings(pairs)
-    mv.build_ann_serving(
-        n_cells=12, m=8, ef_construction=60, probes=4,
-        frame_model_min_cells=8,  # force the frame path at test scale
-    )
-    assert isinstance(mv._ann_cents, CentroidFrame)
-    assert mv._ann_meta["model"] == "frame"
-    assert mv._ann_meta["n_cells"] == mv._ann_cents.n_cells
-    q = _qvec(pairs, 3)
-    approx = {
-        r.vec_id for r in mv.search_embeddings(q, k=10, ann=True).collect()
-    }
-    exact = {r.vec_id for r in mv.search_embeddings(q, k=10).collect()}
-    assert len(approx & exact) / 10 >= 0.8
-    # batch join routes through _probe_cells_frame
-    qdf = spark.createDataFrame(
-        [(1, q)], "query_id long, query_vec array<double>"
-    )
-    batch = mv.search_embeddings_many(qdf, k=10, ann=True).collect()
-    assert len(batch) == 10
-    # save: parquet + manifest, no json model; reopened store identical
+    if kind == "text":
+        q = t.mv.frame_embedding(ids[3])
+        approx = {v for v, _, _ in search(t.mv)}
+        exact = {r.vec_id for r in t.mv.search_embeddings(q, k=10).collect()}
+        assert len(approx & exact) / 10 >= 0.8
+        # batch join routes through _probe_cells_frame
+        qdf = spark.createDataFrame(
+            [(1, q)], "query_id long, query_vec array<double>"
+        )
+        assert len(t.mv.search_embeddings_many(qdf, k=10, ann=True).collect()) == 10
+    # (2) upsert + tombstone -> incremental delta == rebuild
+    (new,) = t.add(1)
+    t.mv.delete(ids[5])
+    t.refresh()
+    truth = build_nsw_index_ivf(t.truth(), t.model, m=8, ef_construction=60)
+    assert _graph_key(t.index) == _graph_key(truth)
+    # (3) persistence: frame dir + no json; reopen loads a frame model
     path = str(tmp_path / "store")
-    mv.save(path)
+    t.mv.save(path)
     assert os.path.exists(
-        os.path.join(path, "ann_centroids.frame", "manifest.json")
+        os.path.join(path, f"{t.key}_centroids.frame", "manifest.json")
     )
-    assert not os.path.exists(os.path.join(path, "ann_centroids.json"))
-    before = [
-        (r.vec_id, r.score, r.rank)
-        for r in mv.search_embeddings(q, k=10, ann=True).collect()
-    ]
-    mv2 = MemvidSpark.open(spark, path)
-    assert isinstance(mv2._ann_cents, CentroidFrame)
-    after = [
-        (r.vec_id, r.score, r.rank)
-        for r in mv2.search_embeddings(q, k=10, ann=True).collect()
-    ]
-    assert before == after
-    # incremental maintenance on the frame path: upsert + tombstone at
-    # save time must equal a fresh rebuild over the surviving track
-    extra = _unit_blob_pairs(n_blobs=1, per_blob=40, start_id=100000)
-    mv2.add_embeddings(extra)
-    mv2.delete(7)
-    mv2.save(path)  # routes refresh_ann_index -> apply_delta_ivf
-    served = {r.vec_id for r in mv2.search_embeddings(q, k=20, ann=True).collect()}
-    assert 7 not in served
-    # truth: a fresh store + fresh frame-path build over the same rows
-    mv3 = MemvidSpark.open(spark, path)
-    assert isinstance(mv3._ann_cents, CentroidFrame)
-    got = {
-        r.vec_id
-        for r in mv3.search_embeddings(q, k=10, ann=True).collect()
-    }
-    exact2 = {
-        r.vec_id for r in mv3.search_embeddings(q, k=10).collect()
-    }
-    assert len(got & exact2) / 10 >= 0.8
+    assert not os.path.exists(os.path.join(path, f"{t.key}_centroids.json"))
+    before = search(t.mv) if kind == "text" else None
+    re = t.reopen(path)
+    assert re.meta["model"] == "frame"
+    assert isinstance(re.model, CentroidFrame)
+    assert new in re.served() and ids[5] not in re.served()
+    if kind == "text":
+        assert search(re.mv) == before
+    # (4) a further mutation on the REOPENED store delta-applies
+    (late,) = re.add(1)
+    re.refresh()
+    assert late in re.served()
+    rep = _report(re.mv)
+    assert rep[("missing", f"{t.key}_index")] == 0
+    assert rep[("orphaned", f"{t.key}_index")] == 0
 
 
-def test_frame_model_drift_retrain_stays_frame(spark):
-    """A drift retrain of a frame-model tier re-enters
-    build_ann_serving with the persisted frame_model_min_cells — the
-    model kind survives the retrain (auto-resize included)."""
-    from memvid_spark.operators.hnsw import CentroidFrame
-
+def test_frame_model_drift_retrain_stays_frame(spark, monkeypatch):
+    """A retrain of a frame-model tier (the rebuild the drift policy
+    and the doctor heal share) trains the same form again: the form
+    follows the cell count, auto-resize included."""
+    monkeypatch.setattr(hnsw, "FRAME_MODEL_MIN_CELLS", 8)
     pairs = _unit_blob_pairs(n_blobs=4, per_blob=300)
     mv = MemvidSpark(spark)
     mv.add_embeddings(pairs)
-    mv.build_ann_serving(
-        n_cells=10, m=8, ef_construction=60, probes=4,
-        frame_model_min_cells=8,
-    )
+    mv.build_ann_serving(n_cells=10, m=8, ef_construction=60, probes=4)
     assert mv._ann_meta["model"] == "frame"
-    # force the retrain branch via the facade's own policy entry
-    mv.build_ann_serving(
-        n_cells=10, m=8, ef_construction=60, probes=4,
-        frame_model_min_cells=mv._ann_meta["frame_model_min_cells"],
-    )
+    mv._text_tier.rebuild()
     assert isinstance(mv._ann_cents, CentroidFrame)
     assert mv._ann_meta["model"] == "frame"
+
+
+def test_opens_store_saved_with_frame_model_bound(spark, tmp_path):
+    """Stores saved before the model form moved into hnsw record a
+    ``frame_model_min_cells`` bound in each tier's manifest meta next
+    to a json model. open() ignores the key and serves identical
+    answers."""
+    t = _Tier(spark, "text")
+    ids = t.add(1200)  # above the engage bound: the ANN route serves
+    t.build(n_cells=4)
+    img = _Tier(spark, "image", mv=t.mv)
+    img.add(6)
+    img.build()
+    q = t.mv.frame_embedding(ids[3])
+    path = str(tmp_path / "store")
+    t.mv.save(path)
+    before = [
+        (r.vec_id, r.score, r.rank)
+        for r in t.mv.search_embeddings(q, k=10, ann=True).collect()
+    ]
+    man_path = os.path.join(path, "manifest.json")
+    with open(man_path, encoding="utf-8") as f:
+        man = json.load(f)
+    for key in ("ann", "img_ann"):
+        assert os.path.exists(os.path.join(path, f"{key}_centroids.json"))
+        man[key]["frame_model_min_cells"] = 4096
+    with open(man_path, "w", encoding="utf-8") as f:
+        json.dump(man, f)
+    re = MemvidSpark.open(spark, path)
+    after = [
+        (r.vec_id, r.score, r.rank)
+        for r in re.search_embeddings(q, k=10, ann=True).collect()
+    ]
+    assert after == before
+    assert re.image_ann_enabled() and re._img_ann_meta["n_rows"] == 6

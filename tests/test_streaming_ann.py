@@ -446,35 +446,45 @@ def test_out_of_band_retrain_and_swap_between_triggers(spark, tmp_path):
     assert _graph_rows(mt.index(spark)) == _graph_rows(truth)
 
 
-def _frame_cents(spark, rows, n_cells=6):
-    from memvid_spark.operators.hnsw import train_cell_centroids_frame
+def _model(spark, rows, form, monkeypatch):
+    """A 6-cell coarse model in the asked form. The frame form lowers
+    the hnsw bound, so the sink's retrains keep training frames."""
+    from memvid_spark.operators import hnsw
 
+    if form == "frame":
+        monkeypatch.setattr(hnsw, "FRAME_MODEL_MIN_CELLS", 2)
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    return train_cell_centroids_frame(emb, n_cells, n_hint=len(rows))
+    return hnsw.train_coarse_model(emb, 6, n_hint=len(rows))
 
 
-def test_frame_mode_sink_streams_retrains_and_restarts(spark, tmp_path):
-    """Round-11 serving wiring: a sink running past
-    frame_model_min_cells holds the coarse model as a CentroidFrame —
-    deltas and retrains never collect the O(k·d) table. Pins:
-    (1) streamed batches ≡ one rebuild over the surviving corpus on
-    the frame path; (2) the first batch persists the model next to the
-    index (parquet + manifest + index marker); (3) a FORCED retrain
-    routes through _retrain_frame (model id advances, marker matches,
-    self.centroids stays a frame); (4) a RESTARTED supervisor
-    (centroids=None) reloads the persisted model and its next delta
-    still equals the rebuild."""
-    import json
+MODEL_FORMS = ("ndarray", "frame")
+
+
+@pytest.mark.parametrize("form", MODEL_FORMS)
+def test_sink_model_streams_retrains_and_restarts(
+    spark, tmp_path, monkeypatch, form
+):
+    """One model lifecycle for both coarse-model forms (a frame model
+    is never collected). Pins: (1) streamed batches ≡ one rebuild over
+    the surviving corpus; (2) the first batch persists the model next
+    to the index in its form, and the index marker names it; (3) a
+    FORCED retrain persists a new model generation (model id advances,
+    marker matches, no ``.next`` left, form kept); (4) a RESTARTED
+    supervisor (centroids=None) reloads the persisted model and its
+    next delta still equals the rebuild."""
     import os
 
-    from memvid_spark.operators.hnsw import CentroidFrame
+    from memvid_spark.operators.hnsw import (
+        coarse_model_manifest,
+        coarse_model_meta,
+        coarse_model_path,
+    )
 
     all_rows = _vecs(spark, range(90))
-    cf = _frame_cents(spark, all_rows)
     store = str(tmp_path / "ann")
     mt = StreamingAnnMaintainer(
-        store, cf, m=8, ef_construction=60, frame_model_min_cells=2,
-        target_cell_rows=None,
+        store, _model(spark, all_rows, form, monkeypatch),
+        m=8, ef_construction=60, target_cell_rows=None,
     )
 
     def cdc(rows, deleted=(), seq=0):
@@ -483,40 +493,37 @@ def test_frame_mode_sink_streams_retrains_and_restarts(spark, tmp_path):
         return spark.createDataFrame(data, ANN_CDC_SCHEMA)
 
     mt.apply_batch(cdc(all_rows[:40]), 0)
-    # (2) model persisted, index marker names it
-    assert os.path.exists(os.path.join(mt.model_path, "manifest.json"))
+    # (2) model persisted in its form, index marker names it
+    suffix = ".frame" if form == "frame" else ".json"
+    assert coarse_model_path(mt.model_base) == mt.model_base + suffix
     marker = os.path.join(mt.index_path, "_MODEL_ID")
-    assert os.path.exists(marker)
-    with open(os.path.join(mt.model_path, "manifest.json")) as f:
-        mid0 = json.load(f)["model_id"]
+    mid0 = coarse_model_manifest(mt.model_base)["model_id"]
     assert open(marker).read().strip() == mid0
     mt.apply_batch(cdc(all_rows[40:80], deleted=[3, 17], seq=1), 1)
     # (4) restart: a new maintainer with centroids=None reloads
     mt2 = StreamingAnnMaintainer(
-        store, None, m=8, ef_construction=60, frame_model_min_cells=2,
-        target_cell_rows=None,
+        store, None, m=8, ef_construction=60, target_cell_rows=None,
     )
     moved = _vecs(spark, [5], shift=4.0)
     mt2.apply_batch(cdc(all_rows[80:] + moved, seq=2), 2)
-    assert isinstance(mt2.centroids, CentroidFrame)
+    assert coarse_model_meta(mt2.centroids)["model"] == form
     surviving = {i: v for i, v in all_rows if i not in (3, 17)}
     surviving[5] = moved[0][1]
     truth_emb = spark.createDataFrame(
         sorted(surviving.items()), "vec_id long, embedding array<double>"
     )
-    # (1) the SAME persisted frame model must rebuild to the same graph
+    # (1) the SAME persisted model must rebuild to the same graph
     model = mt2._coarse_model(spark)
     truth = build_nsw_index_ivf(truth_emb, model, m=8, ef_construction=60)
     assert _graph_rows(mt2.index(spark)) == _graph_rows(truth)
-    # (3) forced retrain: frame lifecycle end to end
+    # (3) forced retrain: a new generation, same form
     stats = mt2.retrain_and_swap(spark, force=True)
     assert stats["retrained"] is True
-    assert isinstance(mt2.centroids, CentroidFrame)
-    with open(os.path.join(mt2.model_path, "manifest.json")) as f:
-        mid1 = json.load(f)["model_id"]
+    assert coarse_model_meta(mt2.centroids)["model"] == form
+    mid1 = coarse_model_manifest(mt2.model_base)["model_id"]
     assert mid1 != mid0
     assert open(marker).read().strip() == mid1
-    assert not os.path.exists(mt2.model_path + ".next")
+    assert coarse_model_path(mt2.model_base + ".next") is None
     # the retrained index serves: k=1 self-lookup on a surviving id
     hit = nsw_knn(
         mt2.index(spark).filter(F.col("cell") >= 0), surviving[8], k=1
@@ -524,10 +531,13 @@ def test_frame_mode_sink_streams_retrains_and_restarts(spark, tmp_path):
     assert hit[0].vec_id == 8
 
 
-def test_frame_model_crash_window_promotes_matching_next(spark, tmp_path):
+@pytest.mark.parametrize("form", MODEL_FORMS)
+def test_model_crash_window_promotes_matching_next(
+    spark, tmp_path, monkeypatch, form
+):
     """Crash between the index swap and the model promote: the live
     index's marker names a model that still sits in ``.next`` while
-    the live model dir holds the PREVIOUS generation. The next
+    the live model holds the PREVIOUS generation. The next
     index()/recovery must promote the matching ``.next`` forward and
     reload the in-memory model — serving and delta assignment stay on
     the generation the index was built with."""
@@ -535,40 +545,46 @@ def test_frame_model_crash_window_promotes_matching_next(spark, tmp_path):
     import os
     import shutil
 
-    from memvid_spark.operators.hnsw import CentroidFrame
+    from memvid_spark.operators.hnsw import (
+        coarse_model_manifest,
+        coarse_model_meta,
+        coarse_model_path,
+    )
 
     rows = _vecs(spark, range(60))
-    cf = _frame_cents(spark, rows)
     store = str(tmp_path / "ann")
     mt = StreamingAnnMaintainer(
-        store, cf, m=8, ef_construction=60, frame_model_min_cells=2,
-        target_cell_rows=None,
+        store, _model(spark, rows, form, monkeypatch),
+        m=8, ef_construction=60, target_cell_rows=None,
     )
     data = [(i, v, False, 0) for i, v in rows]
     mt.apply_batch(spark.createDataFrame(data, ANN_CDC_SCHEMA), 0)
     mt.retrain_and_swap(spark, force=True)
-    with open(os.path.join(mt.model_path, "manifest.json")) as f:
-        live_id = json.load(f)["model_id"]
-    # reconstruct the crash window: live model becomes .next (the
-    # not-yet-promoted new generation); a stale older model sits live
-    nxt = mt.model_path + ".next"
-    shutil.move(mt.model_path, nxt)
-    shutil.copytree(nxt, mt.model_path)
-    man_p = os.path.join(mt.model_path, "manifest.json")
+    live_id = coarse_model_manifest(mt.model_base)["model_id"]
+    # reconstruct the crash window: the live model becomes .next (the
+    # not-yet-promoted new generation); a stale older one sits live
+    live = coarse_model_path(mt.model_base)
+    suffix = os.path.splitext(live)[1]
+    nxt = mt.model_base + ".next"
+    shutil.move(live, nxt + suffix)
+    if suffix == ".frame":
+        shutil.copytree(nxt + suffix, live)
+        man_p = os.path.join(live, "manifest.json")
+    else:
+        shutil.copy(nxt + suffix, live)
+        man_p = live
     man = json.load(open(man_p))
     man["model_id"] = "stale-previous-generation"
     json.dump(man, open(man_p, "w"))
     # a fresh supervisor restarts on the crashed state
     mt3 = StreamingAnnMaintainer(
-        store, None, m=8, ef_construction=60, frame_model_min_cells=2,
-        target_cell_rows=None,
+        store, None, m=8, ef_construction=60, target_cell_rows=None,
     )
     idx = mt3.index(spark)  # recovery runs here
-    with open(man_p) as f:
-        assert json.load(f)["model_id"] == live_id  # .next promoted
-    assert not os.path.exists(nxt)
+    assert coarse_model_manifest(mt.model_base)["model_id"] == live_id
+    assert coarse_model_path(nxt) is None
     model = mt3._coarse_model(spark)
-    assert isinstance(model, CentroidFrame)
+    assert coarse_model_meta(model)["model"] == form
     # the healed pair still equals a rebuild over the corpus
     truth_emb = spark.createDataFrame(
         sorted(dict(rows).items()), "vec_id long, embedding array<double>"

@@ -1,8 +1,13 @@
 """Simulate the correctness driver: plain SparkSession (no engine confs),
 entry() smoke, then every queries()[name] vs oracle_sql()[name] via DuckDB
-at the given sf dir, comparing column-sorted row multisets."""
+at the given sf dir, comparing column-sorted row multisets.
+
+    python tools/drive_contract.py <sf_dir> [q_name,q_name,...]
+
+Exit status 0 when every query matches its oracle."""
 
 import math
+import os
 import sys
 from datetime import date, datetime
 from decimal import Decimal
@@ -10,10 +15,13 @@ from decimal import Decimal
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
-import __spark_entry__ as e
+# the checkout root (this file lives in <root>/tools/)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import __spark_entry__ as e  # noqa: E402
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+if len(sys.argv) < 2:
+    sys.exit(__doc__)
+SF = sys.argv[1]
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
 # driver-style session: defaults only, no memvid_spark confs
