@@ -1003,7 +1003,6 @@ def as_coarse_model(model):
 def train_coarse_model(
     emb: DataFrame,
     n_cells: int,
-    id_col: str = "vec_id",
     n_hint: int | None = None,
 ):
     """Train a tier's coarse model, picking the form by size: a
@@ -1012,11 +1011,9 @@ def train_coarse_model(
     ``apply_delta_ivf``, ``nsw_knn_pruned``, ``nsw_knn_join``,
     :func:`save_coarse_model`) takes either form."""
     if n_cells > FRAME_MODEL_MIN_CELLS:
-        return train_cell_centroids_frame(
-            emb, n_cells=n_cells, id_col=id_col, n_hint=n_hint
-        )
+        return train_cell_centroids_frame(emb, n_cells=n_cells, n_hint=n_hint)
     return as_coarse_model(
-        train_cell_centroids(emb, n_cells=n_cells, id_col=id_col, n_hint=n_hint)
+        train_cell_centroids(emb, n_cells=n_cells, n_hint=n_hint)
     )
 
 

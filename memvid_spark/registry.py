@@ -8374,17 +8374,23 @@ def q187_hnsw_centroid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "upsert+tombstone delta on the frame path equals one fresh build "
     "over the surviving track row-for-row (exceptAll both ways), "
     "min_recall_ge = ANN recall@10 vs exact >= 0.8 on the planted-"
-    "cluster track.",
+    "cluster track. The lowered bound is process-wide while the query "
+    "runs, so queries must run one at a time.",
 )
 def q188_facade_frame_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from unittest import mock
-
     from .operators import hnsw
 
     # 16 cells past a bound of 8: every train (build and any drift
-    # retrain at save time) picks the frame form
-    with mock.patch.object(hnsw, "FRAME_MODEL_MIN_CELLS", 8):
+    # retrain at save time) picks the frame form. The bound is a
+    # module global, so the lowering holds process-wide for the
+    # query's duration: run this query alone, not alongside other
+    # facade builds or sink retrains in the same process.
+    bound = hnsw.FRAME_MODEL_MIN_CELLS
+    hnsw.FRAME_MODEL_MIN_CELLS = 8
+    try:
         return _q188_facade_frame_model(spark, sf_dir)
+    finally:
+        hnsw.FRAME_MODEL_MIN_CELLS = bound
 
 
 def _q188_facade_frame_model(spark: SparkSession, sf_dir: str) -> DataFrame:

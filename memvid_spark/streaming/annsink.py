@@ -203,9 +203,20 @@ class StreamingAnnMaintainer:
         leaves a live index pointing at a model the live slot doesn't
         hold yet — promote the matching ``.next`` forward. A marker
         that matches the live model means ``.next`` is stale garbage.
-        Without a ``.next`` there is nothing to reconcile."""
+        Without a ``.next`` there is nothing to reconcile. A store left
+        by the earlier frame-only lifecycle names its pending model
+        ``ann_model.frame.next``: it is renamed to this lifecycle's
+        ``.next`` first, so the same promote covers that crash."""
+        import shutil
+
         marker = os.path.join(self.index_path, self._MODEL_MARKER)
         nxt = self.model_base + ".next"
+        legacy = self.model_base + ".frame"
+        if os.path.exists(os.path.join(legacy + ".next", "manifest.json")):
+            drop_coarse_model(nxt)
+            os.replace(legacy + ".next", nxt + ".frame")
+        for p in (legacy + ".next", legacy + ".old"):
+            shutil.rmtree(p, ignore_errors=True)
         if not os.path.exists(marker) or coarse_model_path(nxt) is None:
             return
         with open(marker, encoding="utf-8") as f:

@@ -579,11 +579,18 @@ def test_frame_model_round_trip(spark, tmp_path, monkeypatch, kind):
     the same graph; (4) the reopened store delta-applies a further
     mutation and doctor reports no drift. The text tier (above the
     engage bound) also serves single and batch queries through the
-    frame probe, identically after the round trip."""
+    frame probe, identically after the round trip, and keeps its
+    recall after the reopened delta. The image tier builds auto-sized
+    (40 puts at 2 rows a cell: 20 cells), so auto-sizing picks the
+    frame form too."""
     monkeypatch.setattr(hnsw, "FRAME_MODEL_MIN_CELLS", 8)
     t = _Tier(spark, kind)
-    ids = t.add(1500 if kind == "text" else 40)
-    t.build(n_cells=12, probes=4)
+    if kind == "text":
+        ids = t.add(1500)
+        t.build(n_cells=12, probes=4)
+    else:
+        ids = t.add(40)
+        t.build(target_cell_rows=2, min_cells=12)
     assert isinstance(t.model, CentroidFrame)
     assert t.meta["model"] == "frame"
     assert t.meta["n_cells"] == t.model.n_cells
@@ -595,11 +602,15 @@ def test_frame_model_round_trip(spark, tmp_path, monkeypatch, kind):
             for r in mv.search_embeddings(q, k=10, ann=True).collect()
         ]
 
+    def recall(mv):
+        q = mv.frame_embedding(ids[3])
+        approx = {v for v, _, _ in search(mv)}
+        exact = {r.vec_id for r in mv.search_embeddings(q, k=10).collect()}
+        return len(approx & exact) / 10
+
     if kind == "text":
         q = t.mv.frame_embedding(ids[3])
-        approx = {v for v, _, _ in search(t.mv)}
-        exact = {r.vec_id for r in t.mv.search_embeddings(q, k=10).collect()}
-        assert len(approx & exact) / 10 >= 0.8
+        assert recall(t.mv) >= 0.8
         # batch join routes through _probe_cells_frame
         qdf = spark.createDataFrame(
             [(1, q)], "query_id long, query_vec array<double>"
@@ -629,6 +640,8 @@ def test_frame_model_round_trip(spark, tmp_path, monkeypatch, kind):
     (late,) = re.add(1)
     re.refresh()
     assert late in re.served()
+    if kind == "text":
+        assert recall(re.mv) >= 0.8
     rep = _report(re.mv)
     assert rep[("missing", f"{t.key}_index")] == 0
     assert rep[("orphaned", f"{t.key}_index")] == 0

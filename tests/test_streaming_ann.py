@@ -541,6 +541,25 @@ def test_model_crash_window_promotes_matching_next(
     index()/recovery must promote the matching ``.next`` forward and
     reload the in-memory model — serving and delta assignment stay on
     the generation the index was built with."""
+    _check_crash_window_recovery(spark, tmp_path, monkeypatch, form, None)
+
+
+def test_model_crash_window_promotes_legacy_frame_next(
+    spark, tmp_path, monkeypatch
+):
+    """The same crash window in a store left by the earlier frame-only
+    lifecycle, which wrote its pending model to
+    ``ann_model.frame.next``: recovery must promote that one too, or
+    the new-generation index would run against the old model."""
+    _check_crash_window_recovery(
+        spark, tmp_path, monkeypatch, "frame", "ann_model.frame.next"
+    )
+
+
+def _check_crash_window_recovery(spark, tmp_path, monkeypatch, form, pending):
+    """Build, force a retrain, then move the live model to the pending
+    slot (``pending`` names it inside the store; None is the current
+    ``.next``) and leave a stale previous generation live."""
     import json
     import os
     import shutil
@@ -566,12 +585,13 @@ def test_model_crash_window_promotes_matching_next(
     live = coarse_model_path(mt.model_base)
     suffix = os.path.splitext(live)[1]
     nxt = mt.model_base + ".next"
-    shutil.move(live, nxt + suffix)
+    pending = os.path.join(store, pending) if pending else nxt + suffix
+    shutil.move(live, pending)
     if suffix == ".frame":
-        shutil.copytree(nxt + suffix, live)
+        shutil.copytree(pending, live)
         man_p = os.path.join(live, "manifest.json")
     else:
-        shutil.copy(nxt + suffix, live)
+        shutil.copy(pending, live)
         man_p = live
     man = json.load(open(man_p))
     man["model_id"] = "stale-previous-generation"
@@ -583,6 +603,7 @@ def test_model_crash_window_promotes_matching_next(
     idx = mt3.index(spark)  # recovery runs here
     assert coarse_model_manifest(mt.model_base)["model_id"] == live_id
     assert coarse_model_path(nxt) is None
+    assert not os.path.exists(pending)
     model = mt3._coarse_model(spark)
     assert coarse_model_meta(model)["model"] == form
     # the healed pair still equals a rebuild over the corpus
