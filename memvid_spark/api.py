@@ -28,6 +28,7 @@ from .functions.text import quality_score, token_count
 from .operators import ask as ask_mod
 from .operators import asof, hnsw, knn as knn_mod, search as search_mod
 from .plans.parser import compile_predicate, parse_query
+from .session import local_frame
 
 PUT_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -180,7 +181,8 @@ class _AnnTier:
         meta = self.meta
         dels = None
         if self.mv._tombstones:
-            dels = self.mv.spark.createDataFrame(
+            dels = local_frame(
+                self.mv.spark,
                 [(int(t),) for t in sorted(self.mv._tombstones)],
                 "vec_id long",
             )
@@ -312,21 +314,12 @@ class _TextAnnTier(_AnnTier):
         # array<float>, NOT double: the track stores float32
         # (EMB_SCHEMA), and the delta must round-trip through the same
         # precision or tie-adjacent neighbor orders diverge from a
-        # rebuild over the persisted track. Arrow-path createDataFrame
-        # (pandas input): the python-list form parallelizes across 32
-        # PYTHON slices and every delta-planning action re-pays ~5
-        # cpu_s of worker roundtrips; the Arrow form is JVM-side
-        # batches. Arrow slices small frames into per-row partitions; a
-        # handful of python tasks beats 32 near-empty ones.
-        import pandas as pd
-
-        return self.mv.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "vec_id": [int(fid) for fid, _ in pending],
-                    "embedding": [[float(x) for x in v] for _, v in pending],
-                }
-            ),
+        # rebuild over the persisted track. A local relation splits
+        # into one partition per row up to the core count; a handful of
+        # downstream tasks beats one per vector.
+        return local_frame(
+            self.mv.spark,
+            [(int(fid), [float(x) for x in v]) for fid, v in pending],
             "vec_id long, embedding array<float>",
         ).coalesce(max(1, min(32, len(pending) // 5000)))
 
@@ -360,8 +353,8 @@ class _ImageAnnTier(_AnnTier):
 
     def delta(self, pending: list) -> DataFrame:
         if not pending:
-            return self.mv.spark.createDataFrame(
-                [], "vec_id long, embedding array<double>"
+            return local_frame(
+                self.mv.spark, [], "vec_id long, embedding array<double>"
             )
         # media() already excludes tombstones, so a pending put deleted
         # before the refresh lands only as a delete
@@ -682,7 +675,8 @@ class MemvidSpark:
             )
             for t in self._tables.values()
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "table_id string, source_file string, page_start int, "
             "page_end int, n_rows int, n_cols int, mode string, "
@@ -742,7 +736,8 @@ class MemvidSpark:
             )
             if len(rows) >= top_k:
                 break
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "table_id string, row_index int, frame_id long, "
             "score double, row_text string",
@@ -798,7 +793,8 @@ class MemvidSpark:
             parts.append(self._media_seed)
         if self._media_puts:
             parts.append(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [
                         (int(i), m, bytes(p))
                         for i, m, p in self._media_puts
@@ -807,7 +803,7 @@ class MemvidSpark:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], self.MEDIA_SCHEMA)
+            return local_frame(self.spark, [], self.MEDIA_SCHEMA)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1075,8 +1071,8 @@ class MemvidSpark:
             | {i for kv in self._supersedes.items() for i in kv}
         )
         if referenced:
-            ref_df = self.spark.createDataFrame(
-                [(int(i),) for i in referenced], "_rid long"
+            ref_df = local_frame(
+                self.spark, [(int(i),) for i in referenced], "_rid long"
             )
             missing_ids = {
                 r[0]
@@ -1136,7 +1132,8 @@ class MemvidSpark:
             else:
                 # distributed: recompute hashes in the scan, anti-join
                 # the (broadcast) registry — no corpus rows on the driver
-                sha_df = self.spark.createDataFrame(
+                sha_df = local_frame(
+                    self.spark,
                     [(s,) for s in sorted(self._shas)], "sha string"
                 )
                 missing = (
@@ -1174,7 +1171,7 @@ class MemvidSpark:
     def _union_docs(self) -> DataFrame:
         d = self._seed
         if self._puts:
-            new = self.spark.createDataFrame(self._puts, PUT_SCHEMA)
+            new = local_frame(self.spark, self._puts, PUT_SCHEMA)
             # seed may carry extra columns; align on the put schema
             if d is not None:
                 d = d.select("doc_id", "text", "lang", "source", "n_chars")
@@ -1182,7 +1179,7 @@ class MemvidSpark:
             else:
                 d = new
         if d is None:
-            d = self.spark.createDataFrame([], PUT_SCHEMA)
+            d = local_frame(self.spark, [], PUT_SCHEMA)
         return d
 
     def docs(self) -> DataFrame:
@@ -1570,7 +1567,7 @@ class MemvidSpark:
             + ", token_count long, length_hint long, short_text boolean,"
             + " top_terms array<long>, term_weight_sum long"
         )
-        one = self.spark.createDataFrame([row], schema)
+        one = local_frame(self.spark, [row], schema)
         sk = self._sketch_df()
         if sk is not None:
             sk = sk.filter(F.col(self.id_col) != frame_id).unionByName(one)
@@ -1606,7 +1603,8 @@ class MemvidSpark:
         from .operators import sketchtrack
 
         words = sketchtrack.filter_word_cols(variant)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [],
             f"{self.id_col} long, simhash long, "
             + ", ".join(f"{w} long" for w in words)
@@ -1779,7 +1777,8 @@ class MemvidSpark:
         )
 
         res = self.ask(question, top_k=top_k, mask_pii=mask_pii)
-        cit = self.spark.createDataFrame(
+        cit = local_frame(
+            self.spark,
             [
                 (i + 1, int(fid), float(score))
                 for i, (fid, score) in enumerate(res.citations)
@@ -1859,7 +1858,7 @@ class MemvidSpark:
             # the pre-spill seed (an opened store's parquet) stays
             # where it is — only session adds land in the spill dir
             self._emb_spill_base = self._emb_seed
-        self.spark.createDataFrame(buf, self.EMB_SCHEMA).write.mode(
+        local_frame(self.spark, buf, self.EMB_SCHEMA).write.mode(
             "append"
         ).parquet(self._emb_spill_dir)
         buf.clear()
@@ -1888,9 +1887,9 @@ class MemvidSpark:
         if self._emb_seed is not None:
             parts.append(self._emb_seed)
         if buf:
-            parts.append(self.spark.createDataFrame(buf, self.EMB_SCHEMA))
+            parts.append(local_frame(self.spark, buf, self.EMB_SCHEMA))
         if not parts:
-            return self.spark.createDataFrame([], self.EMB_SCHEMA)
+            return local_frame(self.spark, [], self.EMB_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -2191,7 +2190,8 @@ class MemvidSpark:
             F.col("embedding").cast("array<double>").alias("embedding"),
         )
         if self._tombstones:
-            gone = self.spark.createDataFrame(
+            gone = local_frame(
+                self.spark,
                 [(int(t),) for t in sorted(self._tombstones)], "vec_id long"
             )
             emb = emb.join(gone, "vec_id", "left_anti")
@@ -2226,7 +2226,7 @@ class MemvidSpark:
         text = self._reader_text(payload)
         if len(text) < self.CHUNK_MIN_CHARS:
             return None
-        one = self.spark.createDataFrame([(0, text)], "doc_id long, text string")
+        one = local_frame(self.spark, [(0, text)], "doc_id long, text string")
         rows = chunk_documents(one).orderBy("chunk_index").collect()
         return [r.chunk_text for r in rows]
 
@@ -2263,7 +2263,8 @@ class MemvidSpark:
         other track."""
         rows = getattr(self, "_chunk_emb_puts", [])
         seed = getattr(self, "_chunk_emb_seed", None)
-        buf = self.spark.createDataFrame(
+        buf = local_frame(
+            self.spark,
             rows, "frame_id long, chunk_index long, embedding array<float>"
         )
         return buf if seed is None else seed.unionByName(buf)
@@ -2359,7 +2360,7 @@ class MemvidSpark:
 
     def cards(self) -> DataFrame:
         rows = getattr(self, "_cards", [])
-        return self.spark.createDataFrame(rows, self.CARD_SCHEMA)
+        return local_frame(self.spark, rows, self.CARD_SCHEMA)
 
     def get_current_memory(self, entity: str | None = None) -> DataFrame:
         """Latest non-retracted card per (entity, slot)
@@ -2480,7 +2481,8 @@ class MemvidSpark:
         rows = [
             (slot, vt, card) for slot, (vt, card) in sorted(self._schema_reg.items())
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "slot string, value_type string, cardinality string"
         )
 
@@ -2589,9 +2591,9 @@ class MemvidSpark:
         nodes = getattr(self, "_mesh_nodes", None)
         edges = getattr(self, "_mesh_edges", None)
         if nodes is None:
-            nodes = self.spark.createDataFrame([], self.NODE_SCHEMA)
+            nodes = local_frame(self.spark, [], self.NODE_SCHEMA)
         if edges is None:
-            edges = self.spark.createDataFrame([], self.EDGE_SCHEMA)
+            edges = local_frame(self.spark, [], self.EDGE_SCHEMA)
         return nodes, edges
 
     def has_logic_mesh(self) -> bool:
@@ -2612,7 +2614,7 @@ class MemvidSpark:
         the whole batch: union + re-aggregate on the merge key, never a
         per-node driver loop."""
         self._ensure_writable()
-        new = self.spark.createDataFrame(nodes, self.NODE_SCHEMA)
+        new = local_frame(self.spark, nodes, self.NODE_SCHEMA)
         cur, _ = self.logic_mesh()
         merged = (
             cur.unionByName(new)
@@ -2643,7 +2645,7 @@ class MemvidSpark:
         """(add_mesh_edges, mesh.rs:80-85): existing edges win the
         dedup, like the reference's skip-if-present merge."""
         self._ensure_writable()
-        new = self.spark.createDataFrame(edges, self.EDGE_SCHEMA)
+        new = local_frame(self.spark, edges, self.EDGE_SCHEMA)
         _, cur = self.logic_mesh()
         # anti-join keeps the FIRST (existing) copy of a duplicate key
         fresh = new.join(
@@ -2881,8 +2883,8 @@ class MemvidSpark:
             ("supersedes", set(self._supersedes.values())),
         ):
             if vals:
-                ptr = self.spark.createDataFrame(
-                    [(int(v),) for v in sorted(vals)], "k long"
+                ptr = local_frame(
+                    self.spark, [(int(v),) for v in sorted(vals)], "k long"
                 )
                 dangling = (
                     ptr.join(ids, "k", "left_anti")
@@ -2919,7 +2921,7 @@ class MemvidSpark:
             (seq, "search", f"{q}|k={k}|{','.join(map(str, ids))}", 0.0)
             for seq, q, k, ids in entries
         ]
-        return self.spark.createDataFrame(rows, self.REPLAY_SCHEMA)
+        return local_frame(self.spark, rows, self.REPLAY_SCHEMA)
 
     def replay_log(self) -> DataFrame:
         """The recorded session as a replay_actions table (SURVEY §1.2)."""

@@ -440,7 +440,15 @@ def mojibake_count(col: Column | str) -> Column:
     return total.cast("long")
 
 
-def _sql_quote(s: str) -> str:
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Under the default
+    ``spark.sql.parser.escapedStringLiterals=false`` a backslash starts an
+    escape, so it doubles before the quote does (``a\\'b`` → ``'a\\\\''b'``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def _duckdb_str(s: str) -> str:
+    """``s`` as a DuckDB string literal (backslash is not an escape)."""
     return "'" + s.replace("'", "''") + "'"
 
 
@@ -448,14 +456,14 @@ def sql_repair_mojibake(e: str) -> str:
     """DuckDB twin of :func:`repair_mojibake`."""
     out = e
     for bad, good in MOJIBAKE_MAP:
-        out = f"replace({out}, {_sql_quote(bad)}, {_sql_quote(good)})"
+        out = f"replace({out}, {_duckdb_str(bad)}, {_duckdb_str(good)})"
     return out
 
 
 def sql_mojibake_count(e: str) -> str:
     """DuckDB twin of :func:`mojibake_count`."""
     parts = [
-        f"((length({e}) - length(replace({e}, {_sql_quote(bad)}, ''))) "
+        f"((length({e}) - length(replace({e}, {_duckdb_str(bad)}, ''))) "
         f"// {len(bad)})"
         for bad, _ in MOJIBAKE_MAP
     ]

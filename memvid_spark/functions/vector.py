@@ -12,6 +12,7 @@ path in operators/knn.py; the expressions here are the correctness tier.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, functions as F
@@ -33,12 +34,17 @@ def _as_double_array(col) -> Column:
 
 def _sql_operand(col) -> str | None:
     """SQL text for a column name or a literal vector; None for Column
-    objects (no stable SQL extractor — those keep the Column path).
-    repr(float) is the shortest round-trip form and Spark's parser
-    (Java Double.parseDouble) is correctly rounded, so the parsed
-    literal is bit-identical to what F.lit would embed."""
+    objects (no stable SQL extractor — those keep the Column path) and
+    for vectors with a non-finite component (``inf``/``nan`` have no
+    SQL double literal; lit_vector embeds them). repr(float) is the
+    shortest round-trip form and Spark's parser (Java
+    Double.parseDouble) is correctly rounded, so the parsed literal is
+    bit-identical to what F.lit would embed."""
     if isinstance(col, (list, tuple)):
-        return "array(" + ", ".join(f"{float(v)!r}D" for v in col) + ")"
+        vals = [float(v) for v in col]
+        if not all(math.isfinite(v) for v in vals):
+            return None
+        return "array(" + ", ".join(f"{v!r}D" for v in vals) + ")"
     if isinstance(col, str) and "`" not in col:
         return f"CAST(`{col}` AS ARRAY<DOUBLE>)"
     return None

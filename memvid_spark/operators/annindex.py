@@ -23,6 +23,8 @@ from __future__ import annotations
 import json
 import os
 
+from ..session import local_frame
+
 ARTIFACT_VERSION = 1
 
 
@@ -94,7 +96,8 @@ def save_centroids(centroids_df, path: str) -> None:
 
 def load_centroids(spark, path: str):
     env = _load(path, "ivf")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, c) for i, c in env["data"]],
         "centroid_id int, centroid array<double>",
     )

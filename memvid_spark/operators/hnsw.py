@@ -31,6 +31,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 GRAPH_SCHEMA = (
     "shard int, vec_id bigint, neighbors array<bigint>, "
     "embedding array<double>, entry boolean"
@@ -285,7 +287,9 @@ def _delete_ids(
         return dis.localCheckpoint(), None
     ids = sorted(int(r["vec_id"]) for r in head)
     return (
-        _local_frame(deletes.sparkSession, "vec_id bigint", vec_id=ids),
+        local_frame(
+            deletes.sparkSession, [(v,) for v in ids], "vec_id bigint"
+        ).coalesce(1),
         ids,
     )
 
@@ -689,9 +693,7 @@ def _train_groups(
         g: 1 + flo[g] + (1 if i < rem else 0)
         for i, g in enumerate(order)
     }
-    kg_df = emb.sparkSession.createDataFrame(
-        sorted(kg.items()), "grp int, kg int"
-    )
+    kg_df = local_frame(emb.sparkSession, sorted(kg.items()), "grp int, kg int")
 
     def train_group(pdf):
         import pandas as pd
@@ -1490,28 +1492,6 @@ DRIVER_DELTA_IDS_MAX = 262144
 DRIVER_DELTA_CELLS_MAX = 4096
 
 
-def _local_frame(spark, schema: str, **cols) -> DataFrame:
-    """Tiny driver-built frame via the ARROW path, one partition.
-    The python-list createDataFrame parallelizes over 32 PYTHON slices
-    — measured (r10) ~5 cpu_s of worker roundtrips per action, and on
-    the delta path each broadcast consumer of such a frame scheduled a
-    32-task build stage that was pure per-job floor. The Arrow form is
-    JVM-side batches (~0.2 cpu_s); schema casts apply during
-    conversion. Columns arrive as keyword lists; dtype pins keep empty
-    frames convertible (pandas infers float64 for a bare [])."""
-    import pandas as pd
-
-    def _series(v):
-        if v and isinstance(v[0], bool):  # before int: bool ⊂ int
-            return pd.Series(v, dtype="bool")
-        if v and isinstance(v[0], (list, tuple)):
-            return pd.Series(v, dtype="object")
-        return pd.Series(v, dtype="int64")
-
-    data = {k: _series(list(v)) for k, v in cols.items()}
-    return spark.createDataFrame(pd.DataFrame(data), schema).coalesce(1)
-
-
 # Near-tie rescue threshold for coarse assignment: decisions whose
 # winner-vs-runner-up d2 gap is below _TIE_REL x (row scale) are re-made
 # on the fixed-order (einsum) distances. BLAS GEMM blocks by matrix
@@ -1907,10 +1887,9 @@ def _build_cells(
             "raise stride or max_shard_rows"
         )
     spark = assigned.sparkSession
-    subs_df = _local_frame(
-        spark, "cell int, subs int",
-        cell=sorted(subs), subs=[subs[c] for c in sorted(subs)],
-    )
+    subs_df = local_frame(
+        spark, sorted(subs.items()), "cell int, subs int"
+    ).coalesce(1)
     sharded = (
         assigned.join(F.broadcast(subs_df), "cell")
         .withColumn(
@@ -2179,8 +2158,6 @@ def _delta_ivf_parts(
         if len(head) > DRIVER_DELTA_IDS_MAX:
             head = None
     if head is not None:
-        import pandas as pd
-
         add_cnt: dict[int, int] = {}
         add_min: dict[int, int] = {}
         add_hash: dict[int, list[int]] = {}
@@ -2192,31 +2169,27 @@ def _delta_ivf_parts(
                 add_min[c] = v
             add_hash.setdefault(c, []).append(int(r["_h"]))
             id_set.add(v)
-        # Arrow-path local frames (measured r10: ~0.2 cpu_s per action
-        # vs ~5 for the 32-slice python-list form); float64 embeddings
-        # round-trip exactly (collected doubles ARE python floats)
-        new_assigned = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell": [int(r["cell"]) for r in head],
-                    "vec_id": [int(r["vec_id"]) for r in head],
-                    "embedding": [
-                        [float(x) for x in r["embedding"]] for r in head
-                    ],
-                }
-            ),
+        # float64 embeddings round-trip exactly (collected doubles ARE
+        # python floats)
+        new_assigned = local_frame(
+            spark,
+            [
+                (int(r["cell"]), int(r["vec_id"]), list(r["embedding"]))
+                for r in head
+            ],
             "cell int, vec_id bigint, embedding array<double>",
         ).coalesce(1)
-        new_ids = _local_frame(
-            spark, "vec_id bigint", vec_id=sorted(id_set)
-        )
+        new_ids = local_frame(
+            spark, [(v,) for v in sorted(id_set)], "vec_id bigint"
+        ).coalesce(1)
         if del_list is not None:
             # both sides driver-resident: the distinct union is driver
             # set algebra, not a 2-job AQE aggregate over local rows
-            gone_ids = _local_frame(
-                spark, "vec_id bigint",
-                vec_id=sorted(id_set | set(del_list)),
-            )
+            gone_ids = local_frame(
+                spark,
+                [(v,) for v in sorted(id_set | set(del_list))],
+                "vec_id bigint",
+            ).coalesce(1)
         elif del_ids is not None:
             gone_ids = new_ids.unionByName(del_ids).distinct()
         else:
@@ -2270,8 +2243,10 @@ def _delta_ivf_parts(
     }
     touched = sorted(set(add_cnt) | set(rem_cnt))
     if not touched:
-        return index, spark.createDataFrame([], CELL_GRAPH_SCHEMA), [], []
-    touched_df = _local_frame(spark, "cell int", cell=touched)
+        return index, local_frame(spark, [], CELL_GRAPH_SCHEMA), [], []
+    touched_df = local_frame(
+        spark, [(c,) for c in touched], "cell int"
+    ).coalesce(1)
     keep = index.join(F.broadcast(touched_df), "cell", "left_anti")
     # pin the touched cells' rows ONCE (delta-locality-bounded — the
     # same volume the rebuild shuffles anyway); every consumer below
@@ -2333,11 +2308,9 @@ def _delta_ivf_parts(
                 *[F.lit(x) for cn in sorted(need_probe.items()) for x in cn]
             )[F.col("cell")]
         else:
-            np_df = _local_frame(
-                spark, "cell int, nsubs int",
-                cell=sorted(need_probe),
-                nsubs=[need_probe[c] for c in sorted(need_probe)],
-            )
+            np_df = local_frame(
+                spark, sorted(need_probe.items()), "cell int, nsubs int"
+            ).coalesce(1)
             cand_rows = touched_rows.join(F.broadcast(np_df), "cell")
             nsubs_col = F.col("nsubs")
         mm_col = F.col("shard") != (
@@ -2401,10 +2374,9 @@ def _delta_ivf_parts(
             cell_counts=new_sizes,
         )
         return keep, rebuilt, touched, built
-    elig_df = _local_frame(
-        spark, "cell int, nsubs int",
-        cell=sorted(elig), nsubs=[elig[c] for c in sorted(elig)],
-    )
+    elig_df = local_frame(
+        spark, sorted(elig.items()), "cell int, nsubs int"
+    ).coalesce(1)
     # ---- ineligible touched cells: whole-cell rebuild --------------
     inelig_cells = [c for c in touched if c not in elig]
     if inelig_cells:
@@ -2422,7 +2394,7 @@ def _delta_ivf_parts(
     else:
         # every touched cell is sub-granular eligible — don't spend a
         # plan (and _build_cells' planning) on a provably empty branch
-        rebuilt_inelig = spark.createDataFrame([], CELL_GRAPH_SCHEMA)
+        rebuilt_inelig = local_frame(spark, [], CELL_GRAPH_SCHEMA)
     # ---- eligible cells: rebuild only the changed sub-shards -------
     delta_e = (
         new_assigned.join(F.broadcast(elig_df), "cell")
@@ -2458,10 +2430,9 @@ def _delta_ivf_parts(
             for r in delta_e.select("cell", "shard").distinct().collect()
         }
     _ts = sorted(gone_subs | delta_subs)
-    touched_subs = _local_frame(
-        spark, "cell int, shard int",
-        cell=[c for c, _ in _ts], shard=[sh for _, sh in _ts],
-    )
+    touched_subs = local_frame(
+        spark, _ts, "cell int, shard int"
+    ).coalesce(1)
     sub_keep = old_e.join(
         F.broadcast(touched_subs), ["cell", "shard"], "left_anti"
     )
@@ -2474,11 +2445,11 @@ def _delta_ivf_parts(
         F.broadcast(touched_subs), ["cell", "shard"], "left_semi"
     ).join(new_ids, "vec_id", "left_anti")
     if append_cells and len(append_cells) > DRIVER_DELTA_CELLS_MAX:
-        app_df = _local_frame(
-            spark, "cell int, _app boolean",
-            cell=sorted(append_cells),
-            _app=[True] * len(append_cells),
-        )
+        app_df = local_frame(
+            spark,
+            [(c, True) for c in sorted(append_cells)],
+            "cell int, _app boolean",
+        ).coalesce(1)
         old_e_kept = old_e_kept.join(F.broadcast(app_df), "cell", "left")
         keep_nbrs = F.coalesce(F.col("_app"), F.lit(False))
     else:

@@ -28,6 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.vector import cosine, dot, l2
+from ..session import local_frame
 
 
 def knn(
@@ -329,7 +330,7 @@ def train_centroids(
     C = lloyd_kmeans(X, n_cells, seed=seed, max_iter=max_iter)
     spark = emb.sparkSession
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(C)]
-    return spark.createDataFrame(rows, "centroid_id int, centroid array<double>")
+    return local_frame(spark, rows, "centroid_id int, centroid array<double>")
 
 
 def late_interaction_topk(

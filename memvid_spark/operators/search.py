@@ -27,7 +27,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.text import pin_expr, tokens, tokens_pinned
+from ..functions.text import pin_expr, sql_str, tokens, tokens_pinned
 
 PHRASE_BONUS = 1000.0  # src/lex.rs:281 — phrase hit adds 1000.0
 BM25_K1 = 1.2
@@ -89,10 +89,7 @@ def lex_topk(
         F.col(id_col), F.col(text_col), tokens_pinned(text_col).alias("_toks")
     )
     occ_sql = " + ".join(
-        "size(filter(_toks, x -> x = '{}'))".format(
-            t.lower().replace("'", "''")
-        )
-        for t in terms
+        f"size(filter(_toks, x -> x = {sql_str(t.lower())}))" for t in terms
     )
     score = F.expr(f"CAST(({occ_sql}) AS DOUBLE)")
     if phrase:
@@ -182,9 +179,6 @@ def bm25_topk(
     # literal values replicated exactly — k1+1, 1-b etc. are the same
     # Python-computed doubles via repr round-trip; the oracle
     # hash-match at both SFs pins the IEEE equivalence).
-    def esc(t: str) -> str:
-        return t.replace("'", "''")
-
     # Per-term tf stays the higher-order filter form, NOT
     # size-diff-of-array_remove: a measured round-12 NEGATIVE result.
     # array_remove(tf) is 1.2-1.3x faster in steady state (it compiles;
@@ -198,7 +192,7 @@ def bm25_topk(
         F.expr("size(_toks) AS dl"),
         *[
             F.expr(
-                f"size(filter(_toks, x -> x = '{esc(tt)}')) AS _tf{i}"
+                f"size(filter(_toks, x -> x = {sql_str(tt)})) AS _tf{i}"
             )
             for i, tt in enumerate(terms_lc)
         ],
@@ -321,13 +315,10 @@ def bm25f_topk(
 
     # single-string expressions like bm25_topk (round 12) — same py4j
     # construction-cost motive, same exact operator order
-    def esc(t: str) -> str:
-        return t.replace("'", "''")
-
     def occ_sql(field: str, tt: str) -> str:
         # HOF form by the same measured JIT-warmup negative result as
         # bm25_topk's per-term tf
-        return f"size(filter({field}, x -> x = '{esc(tt)}'))"
+        return f"size(filter({field}, x -> x = {sql_str(tt)}))"
 
     per = fields.select(
         F.col(id_col),

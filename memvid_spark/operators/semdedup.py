@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions.hashing import hash64
 from ..functions.text import tokens
 from ..functions.vector import dot, norm as vnorm
+from ..session import local_frame
 from .mesh import connected_components
 
 SEM_K = 8  # deterministic seed count at test scale (k ∝ corpus size)
@@ -310,7 +311,8 @@ def seed_assign_scaled(
             )
             for r in cnts
         }
-        subs_df = emb.sparkSession.createDataFrame(
+        subs_df = local_frame(
+            emb.sparkSession,
             sorted(subs.items()) or [(0, 1)], "grp int, subs int"
         )
         # a group the sample missed is not provably tiny — "tiny" is

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import catalog
-from .session import fan_out
+from .session import fan_out, local_frame
 from .functions import text as T
 from .operators import asof, dedup, knn, rrf, search, topk
 
@@ -2646,7 +2646,8 @@ def q69_cardinality_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = catalog.load(spark, sf_dir)
     cards = memory.cards_from_events(t.events)
-    reg = spark.createDataFrame(
+    reg = local_frame(
+        spark,
         [("click", "Single"), ("error", "Single")],
         "slot string, cardinality string",
     )
@@ -2888,7 +2889,8 @@ def q34_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x) for x in t.embeddings.filter(F.col("vec_id") == 1).head().embedding
     ]
     r = pq_recall(t.embeddings, qvec, k=10, n_sub=8, n_centroids=64)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(10, float(r), 8, 64)], "k int, recall double, n_sub int, n_centroids int"
     )
 
@@ -3477,7 +3479,7 @@ def q59_temporal_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.load(spark, sf_dir)
     anchor = datetime(2024, 1, 17, 12, 0, tzinfo=timezone.utc)
     rows = [(ph, *resolve_ns(ph, anchor)) for ph in TEMPORAL_PHRASES]
-    bounds = spark.createDataFrame(rows, "phrase string, lo_ns long, hi_ns long")
+    bounds = local_frame(spark, rows, "phrase string, lo_ns long, hi_ns long")
     ev = t.events
     hits = (
         ev.join(
@@ -3538,7 +3540,7 @@ def q62_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.load(spark, sf_dir)
     _, edges = mesh.mesh_from_tpch(t.customer, t.supplier, t.nation, t.region)
     # graph side: suppliers located in nations of region 0 (2 hops inbound)
-    starts = spark.createDataFrame([("region:0",)], "node_id string")
+    starts = local_frame(spark, [("region:0",)], "node_id string")
     reached = mesh.follow(edges, starts, hops=2, direction="in")
     graph_suppliers = reached.filter(F.col("node_id").startswith("supplier:"))
     # text side: lexical hits, each doc linked to a supplier entity
@@ -5930,7 +5932,8 @@ def q115_hnsw_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x) for x in t.embeddings.filter(F.col("vec_id") == 3).head().embedding
     ]
     r = nsw_recall(t.embeddings, qvec, k=10, n_shards=4, m=16)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(10, float(r), 4, 16)], "k int, recall double, n_shards int, m int"
     )
 
@@ -7486,7 +7489,8 @@ def q175_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in knn(t.embeddings, qvec, 10, metric="l2").collect()
     }
     recall = len(approx & exact) / 10.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(10, float(recall), 8, 8, 64, 4, 20)],
         "k int, recall double, n_cells int, n_sub int, n_centroids int, "
         "n_probe int, refine int",
@@ -7773,7 +7777,8 @@ def q180_hnsw_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.vec_id for r in knn(clustered, qvec, k=10, metric="l2").collect()
     }
     recall = len(approx & exact) / 10.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(10, float(recall), 8, 2)],
         "k int, recall double, n_cells int, probes int",
     )

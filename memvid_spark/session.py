@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime confs every entry point applies to whatever session it is given.
 RUNTIME_CONFS = {
@@ -97,6 +97,50 @@ def fan_out(df):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples in schema order, or
+    dicts keyed by field name), typed by ``schema`` (DDL string or
+    StructType). The only way this package builds a frame from Python
+    values.
+
+    ``spark.createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``
+    over a PythonRDD parallelized across every core: each action on the
+    frame, and on every frame that unions or joins it, re-runs Python
+    worker tasks to unpickle the rows (a bare count() of a 10-row frame
+    cost ~5 cpu_s on a 32-core box; on the delta path each broadcast
+    consumer scheduled a build stage that was pure per-job floor). The
+    rows here go to the JVM as one ``pyarrow.Table`` and plan as a
+    ``LocalTableScan``: JVM-resident, folded by the optimizer (an empty
+    side prunes, a broadcast of it costs no build job), no Python worker
+    ever touches it. A pyarrow Table and not pandas: pandas plans an
+    empty frame as ``ExistingRDD``, widens an int column holding None to
+    float64, and falls back to the list path when
+    ``spark.sql.execution.arrow.pyspark.fallback`` applies. The Table
+    path ignores ``spark.sql.execution.arrow.pyspark.enabled``. Values
+    are cast to the schema's Arrow types on the driver: float32 columns
+    round to nearest, as the list path does.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = (
+        schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    )
+    names = struct.fieldNames()
+    rows = [
+        tuple(r[n] for n in names) if isinstance(r, dict) else r for r in rows
+    ]
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    arrow = to_arrow_schema(struct)
+    arrays = [
+        pa.array(list(c), type=f.type)
+        for c, f in zip(cols, arrow, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(app_name: str = "memvid-spark") -> SparkSession:

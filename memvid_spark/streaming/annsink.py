@@ -38,6 +38,7 @@ from ..operators.hnsw import (
     load_coarse_model,
     save_coarse_model,
 )
+from ..session import local_frame
 
 # the CDC row contract: an upsert carries the new embedding; a
 # tombstone sets deleted=true (embedding ignored); ``seq`` orders
@@ -163,7 +164,7 @@ class StreamingAnnMaintainer:
         replays, and delta-apply is idempotent by determinism."""
         self._recover_swap()
         if not os.path.exists(self.index_path):
-            return spark.createDataFrame([], CELL_GRAPH_SCHEMA)
+            return local_frame(spark, [], CELL_GRAPH_SCHEMA)
         spark.catalog.refreshByPath(self.index_path)
         return spark.read.parquet(self.index_path)
 

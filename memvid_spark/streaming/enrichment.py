@@ -30,6 +30,9 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..session import local_frame
+
+
 def _event_schema(ts_type) -> StructType:
     return StructType(
         [
@@ -166,7 +169,7 @@ class EnrichmentWorker:
     def enriched(self, spark: SparkSession) -> DataFrame:
         """The enriched store (and, projected, the manifest)."""
         if not os.path.exists(self.sink_path):
-            return spark.createDataFrame([], ENRICHED_SCHEMA)
+            return local_frame(spark, [], ENRICHED_SCHEMA)
         spark.catalog.refreshByPath(self.sink_path)
         return spark.read.schema(ENRICHED_SCHEMA).parquet(self.sink_path)
 

@@ -367,6 +367,56 @@ def test_bm25f_title_weight_changes_ranking(spark):
     assert f1 == plain
 
 
+def test_search_terms_with_backslashes_and_quotes(spark):
+    """Search terms become Spark SQL string literals, where a backslash
+    starts an escape: ``foo\\``, ``it's`` and ``a\\'b`` must parse and
+    compare as themselves, exactly as the Column form (F.lit) does. The
+    alnum tokenizer never emits such a token, so adding them to a query
+    leaves every ranking as the plain terms give it."""
+    from memvid_spark.functions.text import sql_str
+    from memvid_spark.operators.search import bm25_topk, bm25f_topk, lex_topk
+
+    odd = ["foo\\", "it's", "a\\'b"]
+    toks = spark.createDataFrame(
+        [(odd + ["foo", "a'b", "a\\b", "it''s"],)], "_toks array<string>"
+    )
+    for t in odd:
+        via_sql = F.expr(f"size(filter(_toks, x -> x = {sql_str(t)}))")
+        via_col = F.size(F.filter("_toks", lambda x: x == F.lit(t)))
+        assert tuple(toks.select(via_sql, via_col).head()) == (1, 1), t
+    docs = spark.createDataFrame(
+        [
+            (1, "spark engine notes spark"),
+            (2, "notes on spark it's foo a b"),
+            (3, "gardening and soil"),
+        ],
+        "doc_id long, text string",
+    )
+    for fn in (lex_topk, bm25_topk, bm25f_topk):
+        got = [tuple(r) for r in fn(docs, ["spark", *odd], k=5).collect()]
+        want = [tuple(r) for r in fn(docs, ["spark"], k=5).collect()]
+        assert got == want and [r[0] for r in got] == [1, 2], fn.__name__
+
+
+def test_vector_literal_with_non_finite_component(spark):
+    """inf/nan have no SQL double literal: a literal vector carrying one
+    must score exactly as the Column path (lit_vector) scores it."""
+    from memvid_spark.functions.vector import cosine, dot, lit_vector
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 0.0],), ([0.0, -1.0, 3.0],)], "v array<double>"
+    )
+    inf, nan = float("inf"), float("nan")
+    for q in ([inf, 1.0, 0.0], [1.0, nan, 2.0], [-inf, 0.0, 1.0]):
+        got = df.select(cosine("v", q), dot("v", q)).collect()
+        ref = df.select(
+            cosine(F.col("v"), lit_vector(q)), dot(F.col("v"), lit_vector(q))
+        ).collect()
+        assert [list(map(repr, r)) for r in got] == [
+            list(map(repr, r)) for r in ref
+        ], q
+
+
 def test_triangle_counts_hand_graph(spark):
     """K4 minus one edge: nodes {1,2,3,4}, edges of the complete graph
     without (1,4) -> triangles {1,2,3} and {2,3,4} only. Duplicate and

@@ -268,3 +268,63 @@ def test_plan_lint_no_cartesian_product_any_query(spark):
         if "CartesianProduct" in _plan(df):
             offenders.append(s.name)
     assert offenders == [], f"CartesianProduct in: {offenders}"
+
+
+def test_store_reads_plan_no_python_rdd_scan(spark, tmp_path, monkeypatch):
+    """The facade's session buffers (puts, vectors, chunk vectors, media,
+    tombstones) are JVM-local relations. After one write of each kind,
+    no read of a seeded store plans a ``Scan ExistingRDD`` — a PythonRDD
+    whose every execution runs Python worker tasks — and neither does
+    an empty store's docs()."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from memvid_spark.api import MemvidSpark
+    from memvid_spark.sources.image import png_encode
+
+    seed_path = str(tmp_path / "seed")
+    sid = F.col("id").cast("string")
+    spark.range(20).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("seed note about spark memory "), sid).alias("text"),
+        F.lit("en").alias("lang"),
+        F.concat(F.lit("mv2://frames/"), sid).alias("source"),
+        F.lit(30).cast("long").alias("n_chars"),
+    ).write.parquet(seed_path)
+    mv = MemvidSpark(spark, seed=spark.read.parquet(seed_path))
+    ids = [mv.put(f"spark memory put number {i}") for i in range(3)]
+    mv.add_embeddings([(i, [float(i + 1), 1.0, 0.5]) for i in [0, 1, *ids]])
+    mv.delete(ids[0])
+    mv.put_bytes(png_encode(np.zeros((4, 4, 3), dtype=np.uint8)), uri="a.png")
+    mv.put_with_chunk_embeddings(
+        b"chunked spark memory text " * 8, [[1.0, 0.0], [0.0, 1.0]]
+    )
+
+    reads = {
+        "docs": mv.docs(),
+        "frames": mv.frames(),
+        "embeddings": mv.embeddings(),
+        "chunk_embeddings": mv.chunk_embeddings(),
+        "media": mv.media(),
+        "search": mv.search("spark memory"),
+        "_ann_active_track": mv._ann_active_track(),
+        "empty docs": MemvidSpark(spark).docs(),
+    }
+    plans = {name: _plan(df) for name, df in reads.items()}
+    # ask() collects internally: record the plan of every frame it
+    # collects
+    asked = []
+    frame_cls = type(mv.docs())
+    collect = frame_cls.collect
+
+    def recording(df):
+        asked.append(_plan(df))
+        return collect(df)
+
+    monkeypatch.setattr(frame_cls, "collect", recording)
+    mv.ask("spark memory", query_vec=[1.0, 1.0, 0.5])
+    monkeypatch.undo()
+    assert asked
+    plans.update({f"ask collect {i}": p for i, p in enumerate(asked)})
+    assert mv.media().count() == 1 and mv.chunk_embeddings().count() == 2
+    assert [n for n, p in plans.items() if "ExistingRDD" in p] == []
